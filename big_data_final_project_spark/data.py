@@ -19,9 +19,9 @@ processes, atomically published) into a multi-file mirror under /tmp
 queries read the mirror. Superseded mirrors and dead-pid write
 scratch are swept on first load.
 Same rows, same types, same pushdown/pruning — only the split count
-changes. Disable with SPARK_GRAFT_MIRROR=0. At 100 TB the threshold
-is never hit per-file because real ingest already writes right-sized
-row groups — this is local-bench insurance, not a scale crutch.
+changes. At 100 TB the threshold is never hit per-file because real
+ingest already writes right-sized row groups — this is local-bench
+insurance, not a scale crutch.
 
 The weather-observation schema of the reference
 (producer.py:90-101, README.md:36-45) is declared here too for the
@@ -216,8 +216,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if not _SCRATCH_CLEANED:
         _SCRATCH_CLEANED = True
         clean_dead_pid_scratch()
-    if os.environ.get("SPARK_GRAFT_MIRROR", "1") == "0":
-        return _raw_load(spark, sf_dir, name)
     rows, groups = _source_layout(sf_dir, name)
     want_files = min(_MIRROR_MAX_FILES, max(1, rows // _MIRROR_ROWS_PER_FILE))
     if rows < _MIRROR_MIN_ROWS or groups >= want_files:

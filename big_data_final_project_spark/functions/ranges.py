@@ -6,9 +6,6 @@ from __future__ import annotations
 
 from datetime import timedelta
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 TIME_RANGES: dict[str, timedelta] = {
     "1h": timedelta(hours=1),
     "24h": timedelta(hours=24),
@@ -22,11 +19,3 @@ DEFAULT_RANGE = "24h"
 def range_delta(label: str) -> timedelta:
     """Label → timedelta; unknown → the 24h default (app.py:300)."""
     return TIME_RANGES.get(label, TIME_RANGES[DEFAULT_RANGE])
-
-
-def range_predicate(ts: Column, anchor: Column, label: str) -> Column:
-    """``ts >= anchor - range`` — the engine form of the reference's
-    Mongo `$gte` filter (app.py:311-313), usable against any anchor
-    (wall clock in production, max(ts) in deterministic tests)."""
-    secs = int(range_delta(label).total_seconds())
-    return ts >= anchor - F.expr(f"INTERVAL {secs} SECONDS")

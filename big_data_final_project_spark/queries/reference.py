@@ -18,12 +18,15 @@ operators, stable output.
 
 from __future__ import annotations
 
+from datetime import timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..data import load_table
 from ..functions.numeric import davg, davg_sql, dsum, dsum_sql
+from ..functions.ranges import TIME_RANGES
 from ..registry import query
 
 
@@ -69,7 +72,8 @@ def ref_historical_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RANGES = (("1h", 1), ("24h", 24), ("7d", 168), ("30d", 720))
+# (UI label, lookback hours), in the reference's dropdown order.
+_RANGES = tuple((lbl, d // timedelta(hours=1)) for lbl, d in TIME_RANGES.items())
 
 
 @query(

@@ -295,7 +295,12 @@ def sql_recursive_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     get. Depth-bounded UNION ALL enumerates paths, not nodes, so at
     web scale prefer the loop form (dedup_clusters) whose per-round
     state is one row per node; this surface is for moderate graphs
-    and parity."""
+    and parity.
+
+    Building the DataFrame is not free: the candidate-pair list is
+    materialized eagerly at build time (see below), so even a
+    plan-only caller such as ``explain()`` runs the whole minhash
+    pair pipeline first."""
     from ..operators.scale import materialize
     from .dedup import dedup_minhash_pairs
 

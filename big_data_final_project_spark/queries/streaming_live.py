@@ -21,12 +21,11 @@ from pyspark.sql import functions as F
 from ..data import sf_dir_tag
 from ..registry import query
 from ..streaming.pipeline import (
-    EVENT_SCHEMA,
     N_MALFORMED,
-    TS_FORMAT,
-    _stream_partitions,
+    _drain,
     dedup_stream,
     persist_stream,
+    read_event_files,
     read_event_stream,
     read_store,
     run_to_memory,
@@ -431,11 +430,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..data import load_table
-    from ..streaming.pipeline import (
-        EVENT_SCHEMA,
-        TS_FORMAT,
-        stage_two_phase_events,
-    )
+    from ..streaming.pipeline import stage_two_phase_events
 
     work = _work_dir(sf_dir, "late_audit")
     allphases = os.path.join(work, "all")
@@ -447,13 +442,8 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(staging, exist_ok=True)
 
     def _run_available_now() -> None:
-        raw = spark.readStream.option("maxFilesPerTrigger", "1").text(staging)
         parsed = (
-            raw.select(
-                F.from_json(
-                    "value", EVENT_SCHEMA, {"timestampFormat": TS_FORMAT}
-                ).alias("rec")
-            )
+            read_event_files(spark, staging)
             .select("rec.*")
             .where(F.col("event_id").isNotNull())
         )
@@ -463,14 +453,11 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_stream"))
             .select(F.col("w.start").alias("window_start"), "n_stream")
         )
-        (
+        _drain(
             agg.writeStream.format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+            .outputMode("append"),
+            ckpt,
         )
 
     # Run 1: on-time data only -> commits wm = max(on-time) - delay
@@ -689,14 +676,7 @@ def streaming_scd2_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = _work_dir(sf_dir, "scd2_ckpt")
     done = os.path.join(store, "_DONE")
     if not os.path.exists(done):
-        raw = spark.readStream.option("maxFilesPerTrigger", "1").text(staging)
-        parsed = raw.select(
-            F.col("value").alias("raw"),
-            F.from_json(
-                "value", EVENT_SCHEMA, {"timestampFormat": TS_FORMAT}
-            ).alias("rec"),
-        )
-        valid, _ = split_valid(parsed)
+        valid, _ = split_valid(read_event_files(spark, staging))
 
         def apply_batch(batch: DataFrame, batch_id: int) -> None:
             sp = batch.sparkSession
@@ -740,14 +720,7 @@ def streaming_scd2_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(store)
             )
 
-        with _stream_partitions(spark):
-            q = (
-                valid.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _drain(valid.writeStream.foreachBatch(apply_batch), ckpt)
         with open(done, "w") as fh:
             fh.write("ok")
     import glob as _glob
@@ -935,17 +908,13 @@ def streaming_minhash_screen_live(spark: SparkSession, sf_dir: str) -> DataFrame
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    with _stream_partitions(spark):
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 2)  # 4 staged files -> 2 micro-batches
-            .json(staging)
-            .writeStream.foreachBatch(screen)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 2)  # 4 staged files -> 2 micro-batches
+        .json(staging)
+        .writeStream.foreachBatch(screen),
+        ckpt,
+    )
     return spark.read.option("basePath", store).parquet(store).select(
         "doc_id", "n_dups", "first_match_id", "max_est_jaccard", "is_new"
     )
@@ -1025,15 +994,7 @@ def streaming_quantile_sketch_live(spark: SparkSession, sf_dir: str) -> DataFram
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    with _stream_partitions(spark):
-        q = (
-            _staged_valid(spark, sf_dir)
-            .writeStream.foreachBatch(build_partial)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(_staged_valid(spark, sf_dir).writeStream.foreachBatch(build_partial), ckpt)
 
     merged = (
         spark.read.option("basePath", store)

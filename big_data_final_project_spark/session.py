@@ -33,12 +33,14 @@ from pyspark.sql import SparkSession
 # before 1 GB of input, so the hint stays cpus-derived and plans are
 # unchanged — exactly the "small-data floor, plan-neutral at scale"
 # shape VERDICT r12 prescribed.
-SHUFFLE_TARGET_MB_ENV = "SPARK_GRAFT_SHUFFLE_TARGET_MB"  # default 4
+SHUFFLE_TARGET_BYTES = 4 << 20
 
 
-def _input_volume_bytes() -> int | None:
+def _input_volume_bytes(limit: int) -> int | None:
     """Total bytes under $SPARK_GRAFT_SF_DIR, or None when the env is
-    unset / the dir is unreadable (cluster posture: no clamp)."""
+    unset / the dir is unreadable (cluster posture: no clamp). The
+    walk stops once the total reaches ``limit``: past it the clamp
+    cannot apply, so the exact size does not matter."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
     if not sf_dir or not os.path.isdir(sf_dir):
         return None
@@ -50,6 +52,8 @@ def _input_volume_bytes() -> int | None:
                     total += os.path.getsize(os.path.join(root, f))
                 except OSError:
                     pass
+            if total >= limit:
+                return total
     except OSError:
         return None
     return total or None
@@ -70,13 +74,12 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
-        vol = _input_volume_bytes()
-        target = int(os.environ.get(SHUFFLE_TARGET_MB_ENV, "4")) << 20
-        if vol is not None and target > 0:  # target <= 0 = clamp off
-            # small-data floor clamp (see SHUFFLE_TARGET_MB_ENV above):
+        vol = _input_volume_bytes(shuffle_partitions * SHUFFLE_TARGET_BYTES)
+        if vol is not None:
+            # small-data floor clamp (see SHUFFLE_TARGET_BYTES above):
             # never below 8, never above the cpus-derived hint
             shuffle_partitions = max(
-                8, min(shuffle_partitions, -(-vol // target))
+                8, min(shuffle_partitions, -(-vol // SHUFFLE_TARGET_BYTES))
             )
     builder = (
         SparkSession.builder.appName(app_name)

@@ -14,6 +14,7 @@ test parquet replaces the weather feed, SURVEY §1.3):
            ├─ invalid rows → quarantine sink        [P2 upgraded]
            └─ valid rows
                 ├─ foreachBatch append → parquet store   [S6 upgraded]
+                ├─ foreachBatch merge → latest view      [ST4]
                 ├─ watermark + tumbling agg → live view  [ST6]
                 └─ dropDuplicatesWithinWatermark         [ST2 fix]
 
@@ -21,19 +22,32 @@ Scale posture: the store is written partitioned (date column), each
 micro-batch append is idempotent under checkpoint replay because
 foreachBatch writes batch-id-named subdirs (classic idempotent-sink
 recipe); state stores (window agg, dedup) are bounded by watermark.
+
+The latest view is one flat parquet dir, published by rename: each
+batch reads the live dir, ranks it together with the batch into a
+sibling ``<view>.staged`` dir, moves the live dir aside to
+``<view>.aside``, moves the staged dir in and drops the aside copy.
+The merge keeps the max per key, so a batch replayed after a crash at
+any of those steps gives the same view; a replay that finds only the
+aside copy moves it back first.
+
+Every query the engine starts runs through :func:`_drain`
+(availableNow trigger, pinned shuffle partitions), and every event
+value goes through one codec, :func:`encode_event` /
+:func:`decode_event`.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..data import load_table
-from ..operators.scale import materialize
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -57,6 +71,44 @@ N_MALFORMED = 10  # poison-pill lines injected into staging
 TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
 
+def encode_event() -> Column:
+    """The event columns as one JSON value string (EVENT_SCHEMA field
+    order, microsecond timestamps)."""
+    return F.to_json(
+        F.struct(*EVENT_SCHEMA.fieldNames()), {"timestampFormat": TS_FORMAT}
+    )
+
+
+def decode_event() -> Column:
+    """The ``value`` JSON string → the EVENT_SCHEMA struct; null when
+    the line is not JSON."""
+    return F.from_json("value", EVENT_SCHEMA, {"timestampFormat": TS_FORMAT})
+
+
+# State-store count = shuffle partitions at the query's FIRST batch,
+# and each micro-batch pays per-store open/commit overhead. 32 stores
+# per stateful op is wrong for local finite streams (measured 3x on
+# the stream-stream join: 7.3s -> 2.4s at 8). A real deployment sizes
+# this to sustained throughput / key cardinality instead.
+STREAM_SHUFFLE_PARTITIONS = 8
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str | None = None) -> None:
+    """Run ``writer`` with the availableNow trigger until it has
+    processed every input available at start, with shuffle partitions
+    pinned to STREAM_SHUFFLE_PARTITIONS for the query's lifetime."""
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    conf = SparkSession.active().conf
+    key = "spark.sql.shuffle.partitions"
+    old = conf.get(key)
+    conf.set(key, str(STREAM_SHUFFLE_PARTITIONS))
+    try:
+        writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        conf.set(key, old)
+
+
 def stage_events_as_json(spark: SparkSession, sf_dir: str, staging_dir: str) -> str:
     """Materialize ``events`` as JSON-lines files — the stand-in for
     the Kafka topic's serialized values (producer.py:122 semantics).
@@ -67,12 +119,7 @@ def stage_events_as_json(spark: SparkSession, sf_dir: str, staging_dir: str) -> 
         return staging_dir
     ev = load_table(spark, sf_dir, "events")
     (
-        ev.select(
-            F.to_json(
-                F.struct("event_id", "ts", "user_id", "event_type", "value", "props"),
-                {"timestampFormat": TS_FORMAT},
-            ).alias("value")
-        )
+        ev.select(encode_event().alias("value"))
         .repartition(4)
         .write.mode("overwrite")
         .text(staging_dir)
@@ -146,31 +193,15 @@ def read_event_stream(
         )
     else:
         raw = spark.readStream.text(opts["path"])
-    return raw.select(
-        F.col("value").alias("raw"),
-        F.from_json("value", EVENT_SCHEMA, {"timestampFormat": TS_FORMAT}).alias(
-            "rec"
-        ),
-    )
+    return raw.select(F.col("value").alias("raw"), decode_event().alias("rec"))
 
 
-# State-store count = shuffle partitions at the query's FIRST batch,
-# and each micro-batch pays per-store open/commit overhead. 32 stores
-# per stateful op is wrong for local finite streams (measured 3x on
-# the stream-stream join: 7.3s -> 2.4s at 8). A real deployment sizes
-# this to sustained throughput / key cardinality instead.
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-
-
-@contextmanager
-def _stream_partitions(spark: SparkSession):
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+def read_event_files(spark: SparkSession, staging_dir: str) -> DataFrame:
+    """File-source event stream with one micro-batch per staged file,
+    in read_event_stream's (raw, rec) shape; each caller applies its
+    own validity rule."""
+    raw = spark.readStream.option("maxFilesPerTrigger", "1").text(staging_dir)
+    return raw.select(F.col("value").alias("raw"), decode_event().alias("rec"))
 
 
 def split_valid(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -210,30 +241,18 @@ def persist_stream(
             .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
         )
 
+    _drain(valid.writeStream.foreachBatch(write_batch), checkpoint_dir)
     brokers = brokers if brokers is not None else os.environ.get(KAFKA_BROKERS_ENV)
-    with _stream_partitions(valid.sparkSession):
-        writers = [
-            valid.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-        ]
-        if brokers:
-            payload = valid.select(
-                F.col("event_id").cast("string").alias("key"),
-                F.to_json(
-                    F.struct(*valid.columns), {"timestampFormat": TS_FORMAT}
-                ).alias("value"),
+    if brokers:
+        payload = valid.select(
+            F.col("event_id").cast("string").alias("key"),
+            encode_event().alias("value"),
+        )
+        _drain(
+            payload.writeStream.format("kafka").options(
+                **kafka_sink_options(brokers, checkpoint_dir + "_kafka")
             )
-            writers.append(
-                payload.writeStream.format("kafka")
-                .options(
-                    **kafka_sink_options(brokers, checkpoint_dir + "_kafka")
-                )
-                .trigger(availableNow=True)
-            )
-        queries = [w.start() for w in writers]
-        for q in queries:
-            q.awaitTermination()
+        )
 
 
 def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -282,15 +301,11 @@ def run_to_memory(df: DataFrame, spark: SparkSession, name: str, complete: bool)
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    with _stream_partitions(spark):
-        (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete" if complete else "append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    _drain(
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete" if complete else "append")
+    )
     return spark.table(name)
 
 
@@ -302,42 +317,44 @@ def maintain_latest_view(
 ) -> None:
     """Incrementally maintained latest-record-per-key view — the
     reference's `st.session_state['latest_batch_df']` + find_one(sort
-    =-1) upgraded to a durable materialized view (SURVEY ST4/S8).
+    =-1) upgraded to a durable, incrementally maintained view (SURVEY
+    ST4/S8).
 
     Each micro-batch merges into the compact view (one row per key),
     so readers get point-lookup latency regardless of history size.
-    The merge is read-modify-overwrite on a localCheckpointed frame
-    (lineage detached before the overwrite clobbers its input files);
-    on a lakehouse table format this becomes a MERGE INTO, same
-    dataflow."""
-    from pyspark.sql import Window
+    The merge reads the live view with the batch's schema, writes the
+    ranked result to a staging dir and publishes it by rename (module
+    docstring); a view dir that is missing or empty is an empty view,
+    any other read error fails the batch. On a lakehouse table format
+    this becomes a MERGE INTO, same dataflow."""
+    staged, aside = f"{view_dir}.staged", f"{view_dir}.aside"
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        try:
-            existing = spark.read.parquet(view_dir)
-            merged = existing.unionByName(batch)
-        except Exception:
-            merged = batch
+        if os.path.exists(aside):
+            if os.path.exists(view_dir):  # crashed after the publish
+                shutil.rmtree(aside)
+            else:  # crashed between the two renames
+                os.rename(aside, view_dir)
+        merged = batch
+        if os.path.isdir(view_dir):
+            current = batch.sparkSession.read.schema(batch.schema).parquet(view_dir)
+            merged = current.unionByName(batch)
         w = Window.partitionBy(key).orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
-        latest = (
+        (
             merged.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .drop("__rn")
-            .transform(materialize)
+            .write.mode("overwrite")
+            .parquet(staged)
         )
-        latest.write.mode("overwrite").parquet(view_dir)
+        if os.path.exists(view_dir):
+            os.rename(view_dir, aside)
+        os.rename(staged, view_dir)
+        shutil.rmtree(aside, ignore_errors=True)
 
-    with _stream_partitions(valid.sparkSession):
-        (
-            valid.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    _drain(valid.writeStream.foreachBatch(upsert), checkpoint_dir)
 
 
 def running_counts_stateful(
@@ -357,14 +374,11 @@ def running_counts_stateful(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    raw = (
-        spark.readStream.option("maxFilesPerTrigger", "1").text(staging_dir)
+    parsed = (
+        read_event_files(spark, staging_dir)
+        .select("rec.*")
+        .where(F.col("event_id").isNotNull())
     )
-    parsed = raw.select(
-        F.from_json("value", EVENT_SCHEMA, {"timestampFormat": TS_FORMAT}).alias(
-            "rec"
-        )
-    ).select("rec.*").where(F.col("event_id").isNotNull())
 
     out_schema = T.StructType(
         [
@@ -474,13 +488,8 @@ def running_totals_tws(spark: SparkSession, staging_dir: str) -> DataFrame:
     batch GROUP BY with the same fixed-point expression is an exact
     oracle for it.
     """
-    raw = spark.readStream.option("maxFilesPerTrigger", "1").text(staging_dir)
     parsed = (
-        raw.select(
-            F.from_json(
-                "value", EVENT_SCHEMA, {"timestampFormat": TS_FORMAT}
-            ).alias("rec")
-        )
+        read_event_files(spark, staging_dir)
         .select("rec.*")
         .where(F.col("event_id").isNotNull())
     )
@@ -519,7 +528,6 @@ def stage_two_phase_events(
     watermark: the deterministic late-arrival scenario ST3 is about.
     Idempotent per staging_dir."""
     import glob
-    import shutil
     import time
 
     marker = os.path.join(staging_dir, "_STAGED2")
@@ -531,14 +539,7 @@ def stage_two_phase_events(
     def _write_phase(df: DataFrame, leaf: str) -> str:
         tmp = os.path.join(staging_dir, f"_tmp_{leaf}")
         (
-            df.select(
-                F.to_json(
-                    F.struct(
-                        "event_id", "ts", "user_id", "event_type", "value", "props"
-                    ),
-                    {"timestampFormat": TS_FORMAT},
-                ).alias("value")
-            )
+            df.select(encode_event().alias("value"))
             .coalesce(1)
             .write.mode("overwrite")
             .text(tmp)

@@ -355,3 +355,99 @@ def test_minhash_screen_streams_in_multiple_batches(spark, sf_dir):
     )
     batch_dirs = glob.glob(os.path.join(store, "batch_id=*"))
     assert len(batch_dirs) >= 2, batch_dirs
+
+
+def _view_rows(df):
+    cols = ("user_id", "event_id", "ts", "event_type", "value")
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _latest_view_run(spark, src, view, ckpt):
+    from big_data_final_project_spark.streaming.pipeline import maintain_latest_view
+
+    valid, _ = split_valid(read_event_stream(spark, src))
+    maintain_latest_view(valid, view, ckpt)
+
+
+def test_latest_view_replays_after_crash_at_each_publish_step(
+    spark, sf_dir, staging, tmp_path_factory, monkeypatch
+):
+    """Crash the view publish after the staged write, then again after
+    the live dir is moved aside; each re-run replays the batch from the
+    checkpoint, and the final view equals the batch answer."""
+    import shutil
+
+    from pyspark.errors import StreamingQueryException
+
+    from big_data_final_project_spark.registry import catalog
+
+    base = tmp_path_factory.mktemp("view_crash")
+    src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
+    os.makedirs(src)
+    parts = sorted(f for f in os.listdir(staging) if f.startswith("part-"))
+    half = len(parts) // 2
+    for f in parts[:half]:
+        shutil.copy(os.path.join(staging, f), src)
+    _latest_view_run(spark, src, view, ckpt)  # batch 0 publishes cleanly
+    for f in parts[half:]:
+        shutil.copy(os.path.join(staging, f), src)
+
+    real_rename = os.rename
+    for crash_src in (view, f"{view}.staged"):
+
+        def rename(a, b, crash_src=crash_src):
+            if a == crash_src:
+                raise OSError("injected crash")
+            return real_rename(a, b)
+
+        monkeypatch.setattr(os, "rename", rename)
+        with pytest.raises(StreamingQueryException, match="injected crash"):
+            _latest_view_run(spark, src, view, ckpt)
+        monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(view) and os.path.exists(f"{view}.aside")
+
+    _latest_view_run(spark, src, view, ckpt)  # replays batch 1
+    want = catalog()["stream_dedup_latest"].fn(spark, sf_dir)
+    assert _view_rows(spark.read.parquet(view)) == _view_rows(want)
+    assert not os.path.exists(f"{view}.aside")
+    assert not os.path.exists(f"{view}.staged")
+
+
+def test_latest_view_corrupt_file_raises(spark, staging, tmp_path_factory):
+    """A view whose data file cannot be read fails the batch; the view
+    is neither reset to the batch nor republished."""
+    from pyspark.errors import StreamingQueryException
+
+    base = tmp_path_factory.mktemp("view_corrupt")
+    view = str(base / "view")
+    _latest_view_run(spark, staging, view, str(base / "ckpt1"))
+    for f in os.listdir(view):
+        if f.startswith("part-"):
+            with open(os.path.join(view, f), "wb") as fh:
+                fh.write(b"not a parquet file")
+    before = {p.name: p.read_bytes() for p in (base / "view").iterdir()}
+
+    with pytest.raises(StreamingQueryException):
+        _latest_view_run(spark, staging, view, str(base / "ckpt2"))
+    assert {p.name: p.read_bytes() for p in (base / "view").iterdir()} == before
+
+
+def test_latest_view_unchanged_by_malformed_only_batch(spark, staging, tmp_path_factory):
+    """A micro-batch with no valid row still runs the merge, and the
+    view keeps exactly its previous rows."""
+    import shutil
+
+    base = tmp_path_factory.mktemp("view_malformed")
+    src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
+    os.makedirs(src)
+    for f in os.listdir(staging):
+        if f.startswith("part-0"):
+            shutil.copy(os.path.join(staging, f), src)
+    _latest_view_run(spark, src, view, ckpt)
+    before = _view_rows(spark.read.parquet(view))
+
+    with open(os.path.join(src, "part-malformed.txt"), "w") as fh:
+        fh.write("not json\n{\"event_id\": \n")
+    _latest_view_run(spark, src, view, ckpt)
+    assert os.path.exists(os.path.join(ckpt, "commits", "1"))  # the batch ran
+    assert _view_rows(spark.read.parquet(view)) == before
