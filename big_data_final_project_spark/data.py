@@ -23,6 +23,18 @@ changes. At 100 TB the threshold is never hit per-file because real
 ingest already writes right-sized row groups — this is local-bench
 insurance, not a scale crutch.
 
+Known schemas: building a ``spark.read.parquet`` frame without a
+schema runs one Spark job to infer it from the footer — about 70 ms
+before the query's own action starts. load_table infers each table's
+schema once per source version (the same content key as the mirror)
+and keeps the StructType in a module dict; every later read of that
+version passes it to ``spark.read.schema``, so building a query runs
+no job. The schema is Spark's own inference, not one converted from
+the pyarrow footer, so the NTZ, nanos and decimal mappings stay
+Spark's. Only the schema is cached, never the DataFrame: two handles
+of one table must carry distinct attribute ids, or both sides of a
+self-join would resolve to the same columns.
+
 The weather-observation schema of the reference
 (producer.py:90-101, README.md:36-45) is declared here too for the
 streaming pipeline and its tests.
@@ -58,6 +70,10 @@ _MIRROR_MIN_ROWS = 90_000
 _MIRROR_ROWS_PER_FILE = 25_000
 _MIRROR_MAX_FILES = 32
 
+# Spark schema per (read path, source key), filled by the first read
+# of each source version (module docstring).
+_SCHEMAS: dict[tuple[str, str], T.StructType] = {}
+
 # Reference weather record (reference producer.py:90-101; types per
 # SURVEY.md §1.2). Used by the streaming pipeline + parity tests.
 WEATHER_SCHEMA = T.StructType(
@@ -79,7 +95,19 @@ WEATHER_SCHEMA = T.StructType(
 WEATHER_REQUIRED = ("producer_timestamp", "temp_c", "humidity", "location_name")
 
 
-def _raw_load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _read_parquet(spark: SparkSession, path: str, key: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred on the
+    first read of this source version (module docstring): later reads
+    hand it to the reader, so building them runs no Spark job."""
+    schema = _SCHEMAS.get((path, key))
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[(path, key)] = df.schema
+    return df
+
+
+def _raw_load(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # Session-wide conf, also set (documented) in session.get_spark's
@@ -87,11 +115,12 @@ def _raw_load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Scope note: this types EVERY nanos-timestamp parquet column in
         # the session as long — fine here because `events` is the only
         # table that has ever shipped nanos and the repo always wants the
-        # raw-long + explicit µs-conversion read path below.
+        # raw-long + explicit µs-conversion read path below. The cached
+        # schema keeps the raw long, so cached reads need it set too.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path, key)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
             # TIMESTAMP(NANOS) parquet read as raw nanos: truncate to µs
@@ -103,7 +132,7 @@ def _raw_load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # nanos path. Values are bit-identical under UTC.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path, key)
 
 
 def sf_dir_tag(sf_dir: str) -> str:
@@ -130,7 +159,7 @@ def source_key(sf_dir: str, name: str) -> str:
     return hashlib.md5(raw.encode()).hexdigest()[:10]
 
 
-def _mirror_root(sf_dir: str, name: str) -> str:
+def _mirror_root(sf_dir: str, name: str, key: str | None = None) -> str:
     # Content-keyed (NOT pid-keyed): every process that sees the same
     # source bytes shares one mirror, built once, atomically published.
     # The content key is PER TABLE, so the key lives on the leaf dir
@@ -139,16 +168,17 @@ def _mirror_root(sf_dir: str, name: str) -> str:
     return os.path.join(
         tempfile.gettempdir(),
         f"spark_graft_mirror_{sf_dir_tag(sf_dir)}",
-        f"{name}_{source_key(sf_dir, name)}",
+        f"{name}_{key or source_key(sf_dir, name)}",
     )
 
 
-def _clean_stale_mirrors(sf_dir: str, name: str) -> None:
-    """Drop THIS table's mirrors built from superseded source bytes."""
+def _clean_stale_mirrors(sf_dir: str, name: str, keep: str | None = None) -> None:
+    """Drop THIS table's mirrors built from superseded source bytes
+    (every mirror of ``name`` but ``keep``, default the current one)."""
     import glob
     import shutil
 
-    keep = _mirror_root(sf_dir, name)
+    keep = keep or _mirror_root(sf_dir, name)
     pattern = os.path.join(
         tempfile.gettempdir(),
         f"spark_graft_mirror_{sf_dir_tag(sf_dir)}",
@@ -209,6 +239,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` has shipped as TIMESTAMP(NANOS) (rounds 1-2) and
     TIMESTAMP(MICROS, ntz) (round 3+); ``_raw_load`` branches on the
     physical type so both read identically.
+
+    The first call per source version infers the schema (one Spark
+    job); later calls reuse the cached StructType and run none. Each
+    call returns a fresh DataFrame — caching handles would give a
+    self-join's two sides the same attribute ids.
     """
     global _SCRATCH_CLEANED
     if name not in TABLES:
@@ -216,20 +251,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if not _SCRATCH_CLEANED:
         _SCRATCH_CLEANED = True
         clean_dead_pid_scratch()
+    key = source_key(sf_dir, name)
     rows, groups = _source_layout(sf_dir, name)
     want_files = min(_MIRROR_MAX_FILES, max(1, rows // _MIRROR_ROWS_PER_FILE))
     if rows < _MIRROR_MIN_ROWS or groups >= want_files:
-        return _raw_load(spark, sf_dir, name)
-    mirror = _mirror_root(sf_dir, name)
+        return _raw_load(spark, sf_dir, name, key)
+    mirror = _mirror_root(sf_dir, name, key)
     if not os.path.exists(mirror):
-        _clean_stale_mirrors(sf_dir, name)
+        _clean_stale_mirrors(sf_dir, name, mirror)
         # Build under a pid-private staging path, then publish with one
         # atomic rename: concurrent processes race harmlessly (loser
         # discards its staging copy), and readers only ever see a
         # complete mirror — no marker file needed.
         staging = f"{mirror}.build{os.getpid()}"
         (
-            _raw_load(spark, sf_dir, name)
+            _raw_load(spark, sf_dir, name, key)
             .repartition(want_files)
             .write.mode("overwrite")
             .parquet(staging)
@@ -241,7 +277,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             import shutil
 
             shutil.rmtree(staging, ignore_errors=True)
-    return spark.read.parquet(mirror)
+    return _read_parquet(spark, mirror, key)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

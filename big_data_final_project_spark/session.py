@@ -70,8 +70,19 @@ def get_spark(
     builder picks up master/deploy config from the environment, and the
     configs here remain correct (AQE resizes shuffle partitions at run
     time, so ``spark.sql.shuffle.partitions`` is only an upper hint).
+
+    Without an explicit ``shuffle_partitions`` the hint is clamped by
+    the input volume under ``$SPARK_GRAFT_SF_DIR``, read once here at
+    session build (SHUFFLE_TARGET_BYTES). Queries take their ``sf_dir``
+    as a parameter, so a session built for one dir keeps that dir's
+    clamp when it reads another.
+
+    A ``SPARK_GRAFT_CPUS`` that is not a positive integer raises a
+    ValueError naming the variable.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not cpus.isdecimal() or int(cpus) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}")
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
         vol = _input_volume_bytes(shuffle_partitions * SHUFFLE_TARGET_BYTES)

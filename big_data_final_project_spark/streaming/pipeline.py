@@ -218,6 +218,17 @@ def split_valid(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     return valid, quarantine
 
 
+# The store as persist_stream lays it out: the event columns plus the
+# two partition columns of its batch_id=N/event_date=D directories.
+STORE_SCHEMA = T.StructType(
+    EVENT_SCHEMA.fields
+    + [
+        T.StructField("batch_id", T.IntegerType()),
+        T.StructField("event_date", T.DateType()),
+    ]
+)
+
+
 def persist_stream(
     valid: DataFrame,
     store_dir: str,
@@ -256,9 +267,10 @@ def persist_stream(
 
 
 def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    return spark.read.option("basePath", store_dir).parquet(
-        os.path.join(store_dir, "batch_id=*")
-    )
+    """The persisted store as one STORE_SCHEMA frame. The schema is
+    known, so no inference job runs, and partition discovery under the
+    store dir supplies ``batch_id`` and ``event_date``."""
+    return spark.read.schema(STORE_SCHEMA).parquet(store_dir)
 
 
 def windowed_live_view(valid: DataFrame) -> DataFrame:

@@ -57,18 +57,40 @@ def test_recursive_components_pairs_are_staged(spark, sf_dir):
         sql_recursive_components,
     )
 
-    plan = (
-        sql_recursive_components(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    qe = sql_recursive_components(spark, sf_dir)._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
     # the checkpointed pair list prints as LogicalRDD (inside the
     # recursion's rendered subtree) or Scan ExistingRDD
     assert "LogicalRDD" in plan or "ExistingRDD" in plan
     # the signature pipeline's band-hash machinery must NOT be in the
     # recursion's plan anymore
     assert "band_hash" not in plan and "band_idx" not in plan
+
+    # the same two facts read off the optimized plan tree instead of
+    # its rendering: every scan is the staged pair list, and no node
+    # outputs a banded-signature column (names taken from dedup)
+    from big_data_final_project_spark.data import load_table
+    from big_data_final_project_spark.queries.dedup import sig_rows
+
+    band_cols = set(sig_rows(load_table(spark, sf_dir, "documents")).columns)
+    band_cols -= {"doc_id", "sig"}
+    assert band_cols
+    nodes, stack = [], [qe.optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    scans = {
+        n.nodeName()
+        for n in nodes
+        if n.children().isEmpty() and n.nodeName() != "UnionLoopRef"
+    }
+    assert scans == {"LogicalRDD"}, scans
+    outputs = {
+        n.output().apply(i).name() for n in nodes for i in range(n.output().size())
+    }
+    assert not outputs & band_cols, outputs & band_cols
 
 
 def test_prefix_filter_join_giant_doc_bound(spark, tmp_path):

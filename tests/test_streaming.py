@@ -13,6 +13,7 @@ import pytest
 from big_data_final_project_spark.data import load_table
 from big_data_final_project_spark.streaming.pipeline import (
     N_MALFORMED,
+    STORE_SCHEMA,
     persist_stream,
     read_event_stream,
     read_store,
@@ -71,6 +72,19 @@ def test_store_partitioned_by_date(spark, sf_dir, staging, tmp_path_factory):
     assert batch_dirs
     inner = os.listdir(os.path.join(store, batch_dirs[0]))
     assert any(d.startswith("event_date=") for d in inner)
+
+
+def test_store_schema_matches_inferred_store(spark, staging, tmp_path_factory):
+    """read_store's declared STORE_SCHEMA is exactly what Spark infers
+    from a store persist_stream wrote, and both reads give the same
+    rows."""
+    store = str(tmp_path_factory.mktemp("store3"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt3"))
+    valid, _ = split_valid(read_event_stream(spark, staging))
+    persist_stream(valid, store, ckpt)
+    inferred = spark.read.parquet(store)
+    assert inferred.schema == STORE_SCHEMA
+    assert sorted(read_store(spark, store).collect()) == sorted(inferred.collect())
 
 
 def test_latest_view_matches_batch_semantics(spark, sf_dir, staging, tmp_path_factory):
