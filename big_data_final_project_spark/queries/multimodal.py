@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..data import load_table
+from ..data import load_table, sf_dir_tag, source_key
 from ..registry import query
 
 FRAME_BYTES = 16  # fake "frame" width for the frame-sampling stage
@@ -208,15 +208,27 @@ N_BINARY_FILES = 16  # staged asset files for the binaryFile source
 def stage_binary_assets(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the first N document payloads as real files on
     disk — the stand-in for an object-store asset bucket — so the
-    binaryFile source reads actual file bytes. Idempotent per sf."""
+    binaryFile source reads actual file bytes. Keyed on the documents
+    table's content (data.source_key) like the ingest mirror: built
+    under a pid-private path, published by one rename, superseded
+    copies swept, so a rewritten table never reuses stale files."""
+    import glob
     import os
+    import shutil
+    import tempfile
 
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    staging = f"/tmp/spark_graft_assets_{sf_name}"
-    marker = os.path.join(staging, "_STAGED")
-    if os.path.exists(marker):
+    key = source_key(sf_dir, "documents")
+    root = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_assets_{sf_dir_tag(sf_dir)}"
+    )
+    staging = os.path.join(root, key)
+    if os.path.isdir(staging):
         return staging
-    os.makedirs(staging, exist_ok=True)
+    for d in glob.glob(os.path.join(root, "*")):
+        if not os.path.basename(d).startswith(key):
+            shutil.rmtree(d, ignore_errors=True)
+    build = f"{staging}.build{os.getpid()}"
+    os.makedirs(build, exist_ok=True)
     rows = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < N_BINARY_FILES)
@@ -224,10 +236,12 @@ def stage_binary_assets(spark: SparkSession, sf_dir: str) -> str:
         .collect()
     )
     for r in rows:
-        with open(os.path.join(staging, f"doc_{r['doc_id']}.bin"), "wb") as f:
+        with open(os.path.join(build, f"doc_{r['doc_id']}.bin"), "wb") as f:
             f.write(r["text"].encode("utf-8"))
-    with open(marker, "w") as f:
-        f.write("ok")
+    try:
+        os.rename(build, staging)
+    except OSError:  # another process published first
+        shutil.rmtree(build, ignore_errors=True)
     return staging
 
 
