@@ -13,27 +13,51 @@ work) runs on ONE core no matter how many the session has — measured
 2-4x on the sf0.1 bench. A real lakehouse never serves analytics off
 a raw single-blob drop; it compacts/re-chunks at ingest. load_table
 does the same: tables above a row threshold are rewritten ONCE per
-source version (content-keyed on path+mtime+size, shared across
-processes, atomically published) into a multi-file mirror under /tmp
-(a few seconds, amortized across every subsequent query), and all
-queries read the mirror. Superseded mirrors and dead-pid write
-scratch are swept on first load.
-Same rows, same types, same pushdown/pruning — only the split count
-changes. At 100 TB the threshold is never hit per-file because real
-ingest already writes right-sized row groups — this is local-bench
-insurance, not a scale crutch.
+source version into a multi-file mirror (a shared derived dir, below;
+a few seconds, amortized across every subsequent query), and all
+queries read the mirror. Same rows, same types, same
+pushdown/pruning — only the split count changes. At 100 TB the
+threshold is never hit per-file because real ingest already writes
+right-sized row groups — this is local-bench insurance, not a scale
+crutch.
+
+Derived dirs: every scratch dir built from the driver tables — the
+mirror, date-partitioned stores, staged JSON, binary assets, stream
+stores with their checkpoints and sinks — goes through
+:func:`derived`, under ``<tmp>/spark_graft_derived_<sf_dir_tag>/``.
+Its leaf is ``<name>_<key>``, where the key hashes the ``source_key``
+(path + mtime + size) of each source table and a fingerprint of the
+builder's code (its source and its module's, read once per process).
+A rewritten table or an edited builder therefore gets a new dir;
+nothing is trusted by marker file or by pid.
+
+- Shared (the default), for output that is a pure function of its
+  sources and never written afterwards: built under
+  ``<leaf>.build<pid>`` and published by one rename, so readers only
+  ever see a complete dir and concurrent builders race harmlessly
+  (the loser drops its copy). The filesystem is the only record.
+- Private, for dirs a query mutates and for stores or sinks with a
+  streaming checkpoint beside them: ``<leaf>_<pid>``, wiped and built
+  on its first request in this process, then reused for the rest of
+  it.
+
+A build that raises leaves nothing behind. Building sweeps the other
+versions of the same name, except the private and in-flight
+(``.build<pid>``) dirs of live processes; the first load_table of a
+process also sweeps those of dead processes.
 
 Known schemas: building a ``spark.read.parquet`` frame without a
 schema runs one Spark job to infer it from the footer — about 70 ms
 before the query's own action starts. load_table infers each table's
-schema once per source version (the same content key as the mirror)
-and keeps the StructType in a module dict; every later read of that
-version passes it to ``spark.read.schema``, so building a query runs
-no job. The schema is Spark's own inference, not one converted from
-the pyarrow footer, so the NTZ, nanos and decimal mappings stay
-Spark's. Only the schema is cached, never the DataFrame: two handles
-of one table must carry distinct attribute ids, or both sides of a
-self-join would resolve to the same columns.
+schema once per source version, and every read of a finished derived
+dir once per dir (its path names its version), and keeps the
+StructType in a module dict; every later read of that version passes
+it to ``spark.read.schema``, so building a query runs no job. The
+schema is Spark's own inference, not one converted from the pyarrow
+footer, so the NTZ, nanos and decimal mappings stay Spark's. Only
+the schema is cached, never the DataFrame: two handles of one table
+must carry distinct attribute ids, or both sides of a self-join would
+resolve to the same columns.
 
 The weather-observation schema of the reference
 (producer.py:90-101, README.md:36-45) is declared here too for the
@@ -42,8 +66,15 @@ streaming pipeline and its tests.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import inspect
 import os
+import re
+import shutil
 import tempfile
+from types import CodeType
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -95,10 +126,12 @@ WEATHER_SCHEMA = T.StructType(
 WEATHER_REQUIRED = ("producer_timestamp", "temp_c", "humidity", "location_name")
 
 
-def _read_parquet(spark: SparkSession, path: str, key: str) -> DataFrame:
+def _read_parquet(spark: SparkSession, path: str, key: str = "") -> DataFrame:
     """``spark.read.parquet(path)`` with the schema inferred on the
     first read of this source version (module docstring): later reads
-    hand it to the reader, so building them runs no Spark job."""
+    hand it to the reader, so building them runs no Spark job. A
+    derived dir's path already names its version; other paths pass
+    the ``source_key`` of their file as ``key``."""
     schema = _SCHEMAS.get((path, key))
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
@@ -140,8 +173,6 @@ def sf_dir_tag(sf_dir: str) -> str:
     readability + a short hash of the FULL path, so two directories
     that share a basename (e.g. an override dir also called sf0.1)
     can never alias each other's cache."""
-    import hashlib
-
     full = os.path.abspath(sf_dir.rstrip("/"))
     h = hashlib.md5(full.encode()).hexdigest()[:8]
     return f"{os.path.basename(full)}_{h}"
@@ -151,73 +182,108 @@ def source_key(sf_dir: str, name: str) -> str:
     """Short content key for one source table: full path + mtime + size.
     Regenerated testdata (same path, new bytes) gets a new key, so a
     shared cache can never serve a stale mirror."""
-    import hashlib
-
     path = os.path.join(os.path.abspath(sf_dir.rstrip("/")), f"{name}.parquet")
     st = os.stat(path)
     raw = f"{path}|{st.st_mtime_ns}|{st.st_size}"
     return hashlib.md5(raw.encode()).hexdigest()[:10]
 
 
-def _mirror_root(sf_dir: str, name: str, key: str | None = None) -> str:
-    # Content-keyed (NOT pid-keyed): every process that sees the same
-    # source bytes shares one mirror, built once, atomically published.
-    # The content key is PER TABLE, so the key lives on the leaf dir
-    # (one shared parent per sf_dir) — cleanup of one table's stale
-    # versions can never touch a sibling table's live mirror.
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_mirror_{sf_dir_tag(sf_dir)}",
-        f"{name}_{key or source_key(sf_dir, name)}",
-    )
+# A derived dir's leaf name: ``<name>_<key>``, then ``_<pid>`` for a
+# private dir or ``.build<pid>`` for a shared one being built.
+_DERIVED = re.compile(r"(.+)_([0-9a-f]{12})(?:_(\d+)|\.build(\d+))?")
+
+# Builder code fingerprint per code object, computed once per process.
+_FINGERPRINTS: dict[CodeType, str] = {}
+
+# Private dirs built by this process (module docstring).
+_PRIVATE_BUILT: set[str] = set()
 
 
-def _clean_stale_mirrors(sf_dir: str, name: str, keep: str | None = None) -> None:
-    """Drop THIS table's mirrors built from superseded source bytes
-    (every mirror of ``name`` but ``keep``, default the current one)."""
-    import glob
-    import shutil
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # alive under another uid
+    return True
 
-    keep = keep or _mirror_root(sf_dir, name)
-    pattern = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_mirror_{sf_dir_tag(sf_dir)}",
-        f"{name}_*",
-    )
-    for d in glob.glob(pattern):
-        if d != keep:
+
+def _fingerprint(build: Callable[[str], None]) -> str:
+    fp = _FINGERPRINTS.get(build.__code__)
+    if fp is None:
+        src = inspect.getsource(build) + inspect.getsource(inspect.getmodule(build))
+        fp = _FINGERPRINTS[build.__code__] = hashlib.md5(src.encode()).hexdigest()
+    return fp
+
+
+def _sweep(root: str, name: str, keep: str) -> None:
+    """Drop every version of ``name`` but ``keep``, except the private
+    or in-flight dirs of other live processes."""
+    for d in glob.glob(os.path.join(glob.escape(root), f"{glob.escape(name)}_*")):
+        m = _DERIVED.fullmatch(os.path.basename(d))
+        if d == keep or not m or m[1] != name:
+            continue
+        pid = m[3] or m[4]
+        if pid is None or int(pid) == os.getpid() or not _alive(int(pid)):
             shutil.rmtree(d, ignore_errors=True)
+
+
+def derived(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    sources: tuple[str, ...],
+    build: Callable[[str], None],
+    private: bool = False,
+) -> str:
+    """The path of scratch dir ``name`` derived from the tables
+    ``sources`` of ``sf_dir``; ``build(path)`` fills an empty dir when
+    no current version exists. The key covers the sources' content and
+    the builder's code. Shared by default (built aside, published by
+    rename); ``private`` gives ``<leaf>_<pid>``, built once per
+    process. Building sweeps the superseded versions of ``name`` but
+    not other live processes' dirs (module docstring)."""
+    digest = hashlib.md5(_fingerprint(build).encode())
+    for table in sources:
+        digest.update(source_key(sf_dir, table).encode())
+    root = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_derived_{sf_dir_tag(sf_dir)}"
+    )
+    path = os.path.join(root, f"{name}_{digest.hexdigest()[:12]}")
+    if private:
+        path = f"{path}_{os.getpid()}"
+        if path in _PRIVATE_BUILT:
+            return path
+    elif os.path.isdir(path):
+        return path
+    _sweep(root, name, keep=path)
+    out = path if private else f"{path}.build{os.getpid()}"
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    try:
+        build(out)
+    except BaseException:
+        shutil.rmtree(out, ignore_errors=True)
+        raise
+    if private:
+        _PRIVATE_BUILT.add(path)
+    else:
+        try:
+            os.rename(out, path)
+        except OSError:  # another process published first
+            shutil.rmtree(out, ignore_errors=True)
+    return path
 
 
 def clean_dead_pid_scratch() -> None:
-    """Remove spark_graft_* scratch dirs whose trailing _<pid> points at
-    a process that no longer exists (write-side scratch — bucketed /
-    stream / store / evo — stays pid-keyed for writer isolation, so
-    dead runs would otherwise accumulate under /tmp unboundedly)."""
-    import glob
-    import shutil
-
-    pid_keyed = ("bucketed", "stream", "store", "evo")
-    dirs = [
-        d
-        for kind in pid_keyed
-        for d in glob.glob(
-            os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}_*_*")
-        )
-    ]
-    for d in dirs:
-        tail = d.rsplit("_", 1)[-1]
-        if not tail.isdigit():
-            continue
-        pid = int(tail)
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
+    """Remove the private and in-flight derived dirs of dead processes."""
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_derived_*", "*")
+    for d in glob.glob(pattern):
+        m = _DERIVED.fullmatch(os.path.basename(d))
+        pid = m and (m[3] or m[4])
+        if pid and int(pid) != os.getpid() and not _alive(int(pid)):
             shutil.rmtree(d, ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid: leave it
 
 
 _SCRATCH_CLEANED = False
@@ -251,33 +317,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if not _SCRATCH_CLEANED:
         _SCRATCH_CLEANED = True
         clean_dead_pid_scratch()
-    key = source_key(sf_dir, name)
     rows, groups = _source_layout(sf_dir, name)
     want_files = min(_MIRROR_MAX_FILES, max(1, rows // _MIRROR_ROWS_PER_FILE))
     if rows < _MIRROR_MIN_ROWS or groups >= want_files:
-        return _raw_load(spark, sf_dir, name, key)
-    mirror = _mirror_root(sf_dir, name, key)
-    if not os.path.exists(mirror):
-        _clean_stale_mirrors(sf_dir, name, mirror)
-        # Build under a pid-private staging path, then publish with one
-        # atomic rename: concurrent processes race harmlessly (loser
-        # discards its staging copy), and readers only ever see a
-        # complete mirror — no marker file needed.
-        staging = f"{mirror}.build{os.getpid()}"
+        return _raw_load(spark, sf_dir, name, source_key(sf_dir, name))
+
+    def build(path: str) -> None:
         (
-            _raw_load(spark, sf_dir, name, key)
+            _raw_load(spark, sf_dir, name, source_key(sf_dir, name))
             .repartition(want_files)
             .write.mode("overwrite")
-            .parquet(staging)
+            .parquet(path)
         )
-        os.makedirs(os.path.dirname(mirror), exist_ok=True)
-        try:
-            os.rename(staging, mirror)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(staging, ignore_errors=True)
-    return _read_parquet(spark, mirror, key)
+    return _read_parquet(spark, derived(spark, sf_dir, name, (name,), build))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -42,8 +42,7 @@ PR_BASE = PR_SCALE * 3 // 20  # (1 - d) * SCALE
 
 # Three graph queries share the same pair/edge construction; rebuild
 # it once per (session, sf_dir) and hand out the materialized result
-# (same once-per-process pattern as timeseries._evolved_store), via
-# the shared operators.scale.session_cached (dead-session entries
+# via the shared operators.scale.session_cached (dead-session entries
 # evicted, so stale checkpointed plans don't pin executor storage).
 def _cached(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
     return session_cached(spark, (sf_dir, "graph", kind), build)

@@ -19,6 +19,7 @@ record batches, so executor memory is bounded by batch size
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..data import load_table, sf_dir_tag, source_key
+from ..data import derived, load_table
 from ..registry import query
 
 FRAME_BYTES = 16  # fake "frame" width for the frame-sampling stage
@@ -208,41 +209,21 @@ N_BINARY_FILES = 16  # staged asset files for the binaryFile source
 def stage_binary_assets(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the first N document payloads as real files on
     disk — the stand-in for an object-store asset bucket — so the
-    binaryFile source reads actual file bytes. Keyed on the documents
-    table's content (data.source_key) like the ingest mirror: built
-    under a pid-private path, published by one rename, superseded
-    copies swept, so a rewritten table never reuses stale files."""
-    import glob
-    import os
-    import shutil
-    import tempfile
+    binaryFile source reads actual file bytes. A shared derived dir
+    (data.derived): a rewritten table never reuses stale files."""
 
-    key = source_key(sf_dir, "documents")
-    root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_assets_{sf_dir_tag(sf_dir)}"
-    )
-    staging = os.path.join(root, key)
-    if os.path.isdir(staging):
-        return staging
-    for d in glob.glob(os.path.join(root, "*")):
-        if not os.path.basename(d).startswith(key):
-            shutil.rmtree(d, ignore_errors=True)
-    build = f"{staging}.build{os.getpid()}"
-    os.makedirs(build, exist_ok=True)
-    rows = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < N_BINARY_FILES)
-        .select("doc_id", "text")
-        .collect()
-    )
-    for r in rows:
-        with open(os.path.join(build, f"doc_{r['doc_id']}.bin"), "wb") as f:
-            f.write(r["text"].encode("utf-8"))
-    try:
-        os.rename(build, staging)
-    except OSError:  # another process published first
-        shutil.rmtree(build, ignore_errors=True)
-    return staging
+    def build(path: str) -> None:
+        rows = (
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("doc_id") < N_BINARY_FILES)
+            .select("doc_id", "text")
+            .collect()
+        )
+        for r in rows:
+            with open(os.path.join(path, f"doc_{r['doc_id']}.bin"), "wb") as f:
+                f.write(r["text"].encode("utf-8"))
+
+    return derived(spark, sf_dir, "assets", ("documents",), build)
 
 
 @query(

@@ -23,12 +23,11 @@ replacements for its implicit "Mongo will index it" assumption.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..data import load_table
+from ..data import derived, load_table
 from ..operators.scale import materialize
 from ..functions.numeric import dsum, dsum_sql
 from ..registry import query
@@ -41,39 +40,30 @@ H_BITS = 5
 
 
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write (once per process) lineitem + orders bucketed by the
-    join key into N_BUCKETS, registered in the session catalog.
-    Returns the two table names."""
-    from ..data import sf_dir_tag
+    """lineitem + orders bucketed by the join key into N_BUCKETS, in
+    a private derived dir, registered in the session catalog under
+    names that carry the dir's key. Returns the two table names."""
 
-    sf_tag = sf_dir_tag(sf_dir).replace(".", "_")
-    li_name = f"sg_li_bucketed_{sf_tag}"
-    o_name = f"sg_o_bucketed_{sf_tag}"
-    # Gate on BOTH tables: a failure between the two writes must not
-    # leave the pair half-created for the rest of the process.
-    if not (
-        spark.catalog.tableExists(li_name) and spark.catalog.tableExists(o_name)
-    ):
-        base = os.path.join(
-            tempfile.gettempdir(), f"spark_graft_bucketed_{sf_tag}_{os.getpid()}"
-        )
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .write.bucketBy(N_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", os.path.join(base, "lineitem"))
-            .mode("overwrite")
-            .saveAsTable(li_name)
-        )
-        (
-            load_table(spark, sf_dir, "orders")
-            .write.bucketBy(N_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", os.path.join(base, "orders"))
-            .mode("overwrite")
-            .saveAsTable(o_name)
-        )
-    return li_name, o_name
+    def build(path: str) -> None:
+        for table, col in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+            (
+                load_table(spark, sf_dir, table)
+                .write.bucketBy(N_BUCKETS, col)
+                .sortBy(col)
+                .option("path", os.path.join(path, table))
+                .mode("overwrite")
+                .saveAsTable(f"sg_{table}_{os.path.basename(path)}")
+            )
+
+    path = derived(
+        spark, sf_dir, "bucketed", ("lineitem", "orders"), build, private=True
+    )
+    names = tuple(f"sg_{t}_{os.path.basename(path)}" for t in ("lineitem", "orders"))
+    # Gate on BOTH tables: a session started after the build has an
+    # empty catalog.
+    if not all(spark.catalog.tableExists(n) for n in names):
+        build(path)
+    return names
 
 
 @query(
@@ -948,13 +938,11 @@ def store_python_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     swept), and — unlike the r5 write-once-then-read-only version —
     the timed path does the SAME work on every run, so the bench
     number is unimodal (VERDICT r6 "What's wrong" #3)."""
-    from ..data import sf_dir_tag
     from ..sources.jsonl_sink import register
 
     register(spark)
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_store_pysink_{sf_dir_tag(sf_dir)}_{os.getpid()}",
+    out_dir = derived(
+        spark, sf_dir, "pysink", ("events",), lambda path: None, private=True
     )
     (
         load_table(spark, sf_dir, "events")

@@ -5,20 +5,19 @@ and returns the result as a batch DataFrame — so the DuckDB oracle
 differentially checks the *incremental* execution against batch SQL
 (SURVEY.md §5.4 batch-equivalence; "hard parts" note in §7).
 
-Work dirs are keyed by scale factor + pid: fresh per process, reused
-within one (so checkpoint-replay semantics are exercised when several
-queries share the staged source).
+Staged sources are shared derived dirs; every store, checkpoint and
+sink a query writes is a private one, built on the query's first run
+in a process and reused after (data.derived).
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..data import sf_dir_tag
+from ..data import _read_parquet, derived, load_table
 from ..registry import query
 from ..streaming.pipeline import (
     N_MALFORMED,
@@ -35,18 +34,8 @@ from ..streaming.pipeline import (
 )
 
 
-def _work_dir(sf_dir: str, leaf: str) -> str:
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_stream_{sf_dir_tag(sf_dir)}_{os.getpid()}",
-    )
-    path = os.path.join(base, leaf)
-    os.makedirs(path, exist_ok=True)
-    return path
-
-
 def _staged_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staging = stage_events_as_json(spark, sf_dir, _work_dir(sf_dir, "staging"))
+    staging = stage_events_as_json(spark, sf_dir)
     valid, _ = split_valid(read_event_stream(spark, staging))
     return valid
 
@@ -90,10 +79,16 @@ def streaming_persist_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     upgrade over the reference's at-least-once insert_one
     (app.py:220, SURVEY ST2); malformed lines are quarantined, not
     persisted."""
-    store = _work_dir(sf_dir, "store")
-    ckpt = _work_dir(sf_dir, "ckpt")
-    persist_stream(_staged_valid(spark, sf_dir), store, ckpt)
-    return read_store(spark, store).select(
+
+    def build(path: str) -> None:
+        persist_stream(
+            _staged_valid(spark, sf_dir),
+            os.path.join(path, "store"),
+            os.path.join(path, "ckpt"),
+        )
+
+    work = derived(spark, sf_dir, "persist", ("events",), build, private=True)
+    return read_store(spark, os.path.join(work, "store")).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
 
@@ -128,7 +123,7 @@ def streaming_quarantine_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Validation contract: exactly the N injected malformed lines —
     no more (no false drops), no fewer (no silent passes) — reach the
     quarantine branch (reference logs-and-drops, app.py:264-267)."""
-    staging = stage_events_as_json(spark, sf_dir, _work_dir(sf_dir, "staging"))
+    staging = stage_events_as_json(spark, sf_dir)
     _, quarantine = split_valid(read_event_stream(spark, staging))
     counted = run_to_memory(
         quarantine.select("raw"),
@@ -225,7 +220,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon; the join shuffles both sides on user_id. 150 distinct
     users here, but the key space at 100 TB is whatever the id domain
     is — uniform, no planted skew."""
-    staging = stage_events_as_json(spark, sf_dir, _work_dir(sf_dir, "staging"))
+    staging = stage_events_as_json(spark, sf_dir)
     a, _ = split_valid(read_event_stream(spark, staging))
     b, _ = split_valid(read_event_stream(spark, staging))
     a = a.select(
@@ -429,52 +424,40 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     silent data loss to the quantified late/unfinalized windows."""
     import shutil
 
-    from ..data import load_table
     from ..streaming.pipeline import stage_two_phase_events
 
-    work = _work_dir(sf_dir, "late_audit")
-    allphases = os.path.join(work, "all")
-    os.makedirs(allphases, exist_ok=True)
-    stage_two_phase_events(spark, sf_dir, allphases)
-    staging = os.path.join(work, "staging")
-    sink = os.path.join(work, "sink")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(staging, exist_ok=True)
+    def build(work: str) -> None:
+        phases = stage_two_phase_events(spark, sf_dir)
+        staging = os.path.join(work, "staging")
+        os.makedirs(staging)
 
-    def _run_available_now() -> None:
-        parsed = (
-            read_event_files(spark, staging)
-            .select("rec.*")
-            .where(F.col("event_id").isNotNull())
-        )
-        agg = (
-            parsed.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count("*").alias("n_stream"))
-            .select(F.col("w.start").alias("window_start"), "n_stream")
-        )
-        _drain(
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append"),
-            ckpt,
-        )
+        # Run 1: on-time data only -> commits wm = max(on-time) - delay
+        # and flushes every closed window to the sink. Run 2 (restart
+        # over the same checkpoint): the late slice arrives; the
+        # restored watermark drops all of it. copy2 preserves mtimes,
+        # so the file source's oldest-first order is stable.
+        for phase in ("phase1.txt", "phase2.txt"):
+            shutil.copy2(os.path.join(phases, phase), staging)
+            parsed = (
+                read_event_files(spark, staging)
+                .select("rec.*")
+                .where(F.col("event_id").isNotNull())
+            )
+            agg = (
+                parsed.withWatermark("ts", "10 minutes")
+                .groupBy(F.window("ts", "1 hour").alias("w"))
+                .agg(F.count("*").alias("n_stream"))
+                .select(F.col("w.start").alias("window_start"), "n_stream")
+            )
+            _drain(
+                agg.writeStream.format("parquet")
+                .option("path", os.path.join(work, "sink"))
+                .outputMode("append"),
+                os.path.join(work, "ckpt"),
+            )
 
-    # Run 1: on-time data only -> commits wm = max(on-time) - delay
-    # and flushes every closed window to the sink. copy2 preserves
-    # mtimes, so the file source's oldest-first order is stable.
-    p1 = os.path.join(staging, "phase1.txt")
-    if not os.path.exists(p1):
-        shutil.copy2(os.path.join(allphases, "phase1.txt"), p1)
-    _run_available_now()
-    # Run 2 (restart over the same checkpoint): the late slice
-    # arrives; the restored watermark drops all of it.
-    p2 = os.path.join(staging, "phase2.txt")
-    if not os.path.exists(p2):
-        shutil.copy2(os.path.join(allphases, "phase2.txt"), p2)
-    _run_available_now()
-
-    streamed = spark.read.parquet(sink)
+    work = derived(spark, sf_dir, "late_audit", ("events",), build, private=True)
+    streamed = _read_parquet(spark, os.path.join(work, "sink"))
     ev = load_table(spark, sf_dir, "events")
     batch = ev.groupBy(
         F.window("ts", "1 hour").start.alias("window_start")
@@ -671,11 +654,10 @@ def streaming_scd2_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedups on event_id before re-ranking, so at-least-once delivery
     cannot double-version a user. The oracle is the one-shot batch
     ranking — incremental ≡ batch, hash-exact."""
-    staging = stage_events_as_json(spark, sf_dir, _work_dir(sf_dir, "staging"))
-    store = _work_dir(sf_dir, "scd2_store")
-    ckpt = _work_dir(sf_dir, "scd2_ckpt")
-    done = os.path.join(store, "_DONE")
-    if not os.path.exists(done):
+
+    def build(work: str) -> None:
+        store = os.path.join(work, "store")
+        staging = stage_events_as_json(spark, sf_dir)
         valid, _ = split_valid(read_event_files(spark, staging))
 
         def apply_batch(batch: DataFrame, batch_id: int) -> None:
@@ -720,9 +702,12 @@ def streaming_scd2_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(store)
             )
 
-        _drain(valid.writeStream.foreachBatch(apply_batch), ckpt)
-        with open(done, "w") as fh:
-            fh.write("ok")
+        _drain(
+            valid.writeStream.foreachBatch(apply_batch), os.path.join(work, "ckpt")
+        )
+
+    work = derived(spark, sf_dir, "scd2", ("events",), build, private=True)
+    store = os.path.join(work, "store")
     import glob as _glob
 
     if not _glob.glob(os.path.join(store, "bucket=*")):
@@ -733,7 +718,7 @@ def streaming_scd2_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id bigint, event_id bigint, ts timestamp, value double,"
             " version bigint, is_current boolean",
         )
-    return spark.read.parquet(store).select(
+    return _read_parquet(spark, store).select(
         "user_id", "event_id", "ts", "value", "version", "is_current"
     )
 
@@ -848,74 +833,74 @@ def streaming_minhash_screen_live(spark: SparkSession, sf_dir: str) -> DataFrame
         sig_rows,
     )
 
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") % 10 == 0)
-        .select("doc_id", "text")
-    )
-    staging = _work_dir(sf_dir, "mh_staging")
-    done = os.path.join(staging, "_staged.ok")
-    if not os.path.exists(done):
-        docs.repartition(4).write.mode("overwrite").json(staging)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    corpus = _banded_sig_table(spark, sf_dir).where(F.col("doc_id") % 10 != 0)
-    store = _work_dir(sf_dir, "mh_store")
-    ckpt = _work_dir(sf_dir, "mh_ckpt")
-
-    est = (
-        F.aggregate(
-            F.zip_with(
-                F.col("a.sig"),
-                F.col("b.sig"),
-                lambda x, y: F.when(x == y, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ).cast("double")
-        / N_PERM
-    )
-
-    def screen(batch: DataFrame, batch_id: int) -> None:
-        sigs = sig_rows(batch)
-        hits = (
-            F.broadcast(sigs.alias("a"))
-            .join(
-                corpus.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_hash") == F.col("b.band_hash")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                est.alias("est_jaccard"),
-            )
-            .distinct()
-            .where(F.col("est_jaccard") >= MIN_EST_JACCARD)
-        )
-        spine = batch.select("doc_id").distinct()
-        out = (
-            spine.join(hits, spine.doc_id == hits.doc_a, "left")
-            .groupBy("doc_id")
-            .agg(
-                F.count("doc_b").alias("n_dups"),
-                F.min("doc_b").alias("first_match_id"),
-                F.max("est_jaccard").alias("max_est_jaccard"),
-                (F.count("doc_b") == 0).alias("is_new"),
-            )
-        )
-        out.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
+    def stage_docs(path: str) -> None:
+        (
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("doc_id") % 10 == 0)
+            .select("doc_id", "text")
+            .repartition(4)
+            .write.mode("overwrite")
+            .json(path)
         )
 
-    _drain(
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 2)  # 4 staged files -> 2 micro-batches
-        .json(staging)
-        .writeStream.foreachBatch(screen),
-        ckpt,
-    )
-    return spark.read.option("basePath", store).parquet(store).select(
+    def build(work: str) -> None:
+        staging = derived(spark, sf_dir, "mh_docs", ("documents",), stage_docs)
+        corpus = _banded_sig_table(spark, sf_dir).where(F.col("doc_id") % 10 != 0)
+        est = (
+            F.aggregate(
+                F.zip_with(
+                    F.col("a.sig"),
+                    F.col("b.sig"),
+                    lambda x, y: F.when(x == y, 1).otherwise(0),
+                ),
+                F.lit(0),
+                lambda acc, x: acc + x,
+            ).cast("double")
+            / N_PERM
+        )
+
+        def screen(batch: DataFrame, batch_id: int) -> None:
+            sigs = sig_rows(batch)
+            hits = (
+                F.broadcast(sigs.alias("a"))
+                .join(
+                    corpus.alias("b"),
+                    (F.col("a.band_idx") == F.col("b.band_idx"))
+                    & (F.col("a.band_hash") == F.col("b.band_hash")),
+                )
+                .select(
+                    F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"),
+                    est.alias("est_jaccard"),
+                )
+                .distinct()
+                .where(F.col("est_jaccard") >= MIN_EST_JACCARD)
+            )
+            spine = batch.select("doc_id").distinct()
+            out = (
+                spine.join(hits, spine.doc_id == hits.doc_a, "left")
+                .groupBy("doc_id")
+                .agg(
+                    F.count("doc_b").alias("n_dups"),
+                    F.min("doc_b").alias("first_match_id"),
+                    F.max("est_jaccard").alias("max_est_jaccard"),
+                    (F.count("doc_b") == 0).alias("is_new"),
+                )
+            )
+            out.write.mode("overwrite").parquet(
+                os.path.join(work, "store", f"batch_id={batch_id}")
+            )
+
+        _drain(
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 2)  # 4 staged files -> 2 micro-batches
+            .json(staging)
+            .writeStream.foreachBatch(screen),
+            os.path.join(work, "ckpt"),
+        )
+
+    work = derived(spark, sf_dir, "mh_screen", ("documents",), build, private=True)
+    return _read_parquet(spark, os.path.join(work, "store")).select(
         "doc_id", "n_dups", "first_match_id", "max_est_jaccard", "is_new"
     )
 
@@ -975,30 +960,32 @@ def streaming_quantile_sketch_live(spark: SparkSession, sf_dir: str) -> DataFram
     from ..functions.numeric import finite_measure
     from .sketches import _qsk_bounds_sql, _qsk_bucket_sql, _spark_pow2
 
-    store = _work_dir(sf_dir, "qsk_store")
-    ckpt = _work_dir(sf_dir, "qsk_ckpt")
     bucket = _qsk_bucket_sql("cents", _spark_pow2, "div")
 
-    def build_partial(batch: DataFrame, batch_id: int) -> None:
-        cents = (finite_measure("value").cast("decimal(18,2)") * 100).cast(
-            "bigint"
-        )
-        partial = (
-            batch.select(cents.alias("cents"))
-            .where(F.col("cents").isNotNull())
-            .select(F.expr(bucket).cast("bigint").alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("pn"))
-        )
-        partial.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
+    def build(work: str) -> None:
+        def build_partial(batch: DataFrame, batch_id: int) -> None:
+            cents = (finite_measure("value").cast("decimal(18,2)") * 100).cast(
+                "bigint"
+            )
+            partial = (
+                batch.select(cents.alias("cents"))
+                .where(F.col("cents").isNotNull())
+                .select(F.expr(bucket).cast("bigint").alias("bucket"))
+                .groupBy("bucket")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("pn"))
+            )
+            partial.write.mode("overwrite").parquet(
+                os.path.join(work, "store", f"batch_id={batch_id}")
+            )
+
+        _drain(
+            _staged_valid(spark, sf_dir).writeStream.foreachBatch(build_partial),
+            os.path.join(work, "ckpt"),
         )
 
-    _drain(_staged_valid(spark, sf_dir).writeStream.foreachBatch(build_partial), ckpt)
-
+    work = derived(spark, sf_dir, "qsk", ("events",), build, private=True)
     merged = (
-        spark.read.option("basePath", store)
-        .parquet(store)
+        _read_parquet(spark, os.path.join(work, "store"))
         .groupBy("bucket")
         .agg(F.sum("pn").cast("bigint").alias("n"))
     )

@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..data import load_table, sf_dir_tag
+from ..data import _read_parquet, derived, load_table
 from ..operators.scale import materialize
 from ..functions.numeric import (
     davg,
@@ -123,29 +123,25 @@ def ts_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _partitioned_store(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per process) a date-partitioned copy of events —
-    the layout the streaming persist path would produce at scale
-    (store partitioned by event date, the reference's Mongo replaced
-    by parquet; SURVEY §1.3)."""
-    import os
-    import tempfile
+def _partitioned_store(
+    spark: SparkSession, sf_dir: str, name: str = "store", private: bool = False
+) -> str:
+    """A date-partitioned copy of events — the layout the streaming
+    persist path would produce at scale (store partitioned by event
+    date, the reference's Mongo replaced by parquet; SURVEY §1.3).
+    Destructive lifecycle ops (vacuum / erase) take a private copy,
+    so the pruning queries keep reading stable data."""
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_store_{sf_dir_tag(sf_dir)}_{os.getpid()}",
-    )
-    marker = os.path.join(path, "_built")
-    if not os.path.exists(marker):
-        e = load_table(spark, sf_dir, "events")
+    def build(path: str) -> None:
         (
-            e.withColumn("event_date", F.to_date("ts"))
+            load_table(spark, sf_dir, "events")
+            .withColumn("event_date", F.to_date("ts"))
             .write.mode("overwrite")
             .partitionBy("event_date")
             .parquet(path)
         )
-        open(marker, "w").close()
-    return path
+
+    return derived(spark, sf_dir, name, ("events",), build, private)
 
 
 @query(
@@ -172,7 +168,7 @@ def store_partition_pruned_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _partitioned_store(spark, sf_dir)
     day = F.lit("2024-01-15").cast("date")
     return (
-        spark.read.parquet(store)
+        _read_parquet(spark, store)
         .where(F.col("event_date") == day)
         .groupBy("event_type")
         .agg(
@@ -183,19 +179,11 @@ def store_partition_pruned_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _evolved_store(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per process) a two-generation store: generation 1
-    lacks the event_type column (the schema before a migration),
-    generation 2 carries it — the layout drift every long-lived
-    store accumulates."""
-    import os
-    import tempfile
+    """A two-generation store: generation 1 lacks the event_type
+    column (the schema before a migration), generation 2 carries it —
+    the layout drift every long-lived store accumulates."""
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_evo_{sf_dir_tag(sf_dir)}_{os.getpid()}",
-    )
-    marker = os.path.join(path, "_built")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         e = load_table(spark, sf_dir, "events")
         old = e.where(F.col("event_id") % 2 == 0).select("event_id", "ts", "value")
         new = e.where(F.col("event_id") % 2 == 1).select(
@@ -203,8 +191,8 @@ def _evolved_store(spark: SparkSession, sf_dir: str) -> str:
         )
         old.write.mode("overwrite").parquet(os.path.join(path, "gen=1"))
         new.write.mode("overwrite").parquet(os.path.join(path, "gen=2"))
-        open(marker, "w").close()
-    return path
+
+    return derived(spark, sf_dir, "evolved", ("events",), build)
 
 
 @query(
@@ -231,6 +219,8 @@ def store_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     unified schema in a catalog instead of re-inferring per query —
     mergeSchema here demonstrates the tolerant-read semantics.)"""
     store = _evolved_store(spark, sf_dir)
+    # inferred with mergeSchema on every read: the tolerant read of
+    # mixed generations is what this query shows
     df = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(store, "gen=1"), os.path.join(store, "gen=2")
     )
@@ -989,31 +979,6 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _lifecycle_store(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """A PRIVATE date-partitioned copy of events for destructive
-    lifecycle ops (vacuum / erase) — never the shared store, so the
-    pruning/evolution queries keep reading stable data. pid-keyed
-    (writer isolation); dead-pid copies are swept by data.py."""
-    import os
-    import tempfile
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_store_{kind}_{sf_dir_tag(sf_dir)}_{os.getpid()}",
-    )
-    marker = os.path.join(path, "_built")
-    if not os.path.exists(marker):
-        e = load_table(spark, sf_dir, "events")
-        (
-            e.withColumn("event_date", F.to_date("ts"))
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(path)
-        )
-        open(marker, "w").close()
-    return path
-
-
 @query(
     "store_vacuum_retention",
     oracle="""
@@ -1043,7 +1008,7 @@ def store_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to the kept directories."""
     import shutil
 
-    store = _lifecycle_store(spark, sf_dir, "vacuum")
+    store = _partitioned_store(spark, sf_dir, "store_vacuum", private=True)
     mx = (
         load_table(spark, sf_dir, "events")
         .agg(F.max(F.to_date("ts")).alias("m"))
@@ -1060,7 +1025,7 @@ def store_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             if day < cutoff:
                 shutil.rmtree(os.path.join(store, entry), ignore_errors=True)
     return (
-        spark.read.parquet(store)
+        _read_parquet(spark, store)
         .groupBy(F.col("event_date").alias("day"))
         .agg(F.count("*").cast("bigint").alias("n_rows"))
     )
@@ -1103,8 +1068,8 @@ def store_gdpr_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    store = _lifecycle_store(spark, sf_dir, "gdpr")
-    df = spark.read.parquet(store)
+    store = _partitioned_store(spark, sf_dir, "store_gdpr", private=True)
+    df = _read_parquet(spark, store)
     is_target = F.col("user_id") % 97 == 0
     # affected partitions derive from the RAW table (the erasure
     # request list lives outside the store), which also makes the op
@@ -1147,7 +1112,7 @@ def store_gdpr_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(store, f"event_date={day.isoformat()}"), ignore_errors=True
         )
     affected_set = set(affected_days)
-    out = spark.read.parquet(store)
+    out = _read_parquet(spark, store)
     return out.groupBy(F.col("event_date").alias("day")).agg(
         F.count("*").cast("bigint").alias("n_rows")
     ).withColumn(
@@ -1953,7 +1918,7 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: weekday via ISO day-of-week (Spark ``weekday()+1`` ==
     DuckDB ``isodow``), money through the decimal route."""
-    fact = spark.read.parquet(_partitioned_store(spark, sf_dir))
+    fact = _read_parquet(spark, _partitioned_store(spark, sf_dir))
     dim = (
         load_table(spark, sf_dir, "events")
         .select(F.to_date("ts").alias("d"))

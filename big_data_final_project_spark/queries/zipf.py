@@ -35,6 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..data import _read_parquet, source_key
 from ..operators.scale import session_cached
 from ..registry import query
 from .dedup import (
@@ -75,7 +76,8 @@ N_HOT_SUBSET = 10
 
 
 def _zipf_docs(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(FIXTURE_PATH)
+    key = source_key(os.path.dirname(FIXTURE_PATH), "zipf_documents")
+    return _read_parquet(spark, FIXTURE_PATH, key)
 
 
 @query(

@@ -53,6 +53,12 @@ CODEGEN_CACHE_ENTRIES = 1000
 # an optional k/m/g suffix ("2g", "512m", "2147483648").
 _JVM_SIZE = re.compile(r"[1-9][0-9]*[kKmMgG]?")
 
+# Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: 16g, or half of
+# physical memory on a smaller machine.
+DEFAULT_DRIVER_MEM = (
+    f"{min(16 << 10, os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') >> 21)}m"
+)
+
 
 def _input_volume_bytes(limit: int) -> int | None:
     """Total bytes under $SPARK_GRAFT_SF_DIR, or None when the env is
@@ -109,7 +115,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if not cpus.isdecimal() or int(cpus) < 1:
         raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM)
     if not _JVM_SIZE.fullmatch(driver_mem):
         raise ValueError(
             "SPARK_GRAFT_DRIVER_MEM must be a JVM size such as 2g or 512m, "

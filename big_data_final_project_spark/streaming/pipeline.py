@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..data import load_table
+from ..data import derived, load_table
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -109,28 +109,25 @@ def _drain(writer: DataStreamWriter, checkpoint_dir: str | None = None) -> None:
         conf.set(key, old)
 
 
-def stage_events_as_json(spark: SparkSession, sf_dir: str, staging_dir: str) -> str:
+def stage_events_as_json(spark: SparkSession, sf_dir: str) -> str:
     """Materialize ``events`` as JSON-lines files — the stand-in for
-    the Kafka topic's serialized values (producer.py:122 semantics).
-    Injects N_MALFORMED non-JSON lines so the validation path is
-    actually exercised. Idempotent per staging_dir."""
-    marker = os.path.join(staging_dir, "_STAGED")
-    if os.path.exists(marker):
-        return staging_dir
-    ev = load_table(spark, sf_dir, "events")
-    (
-        ev.select(encode_event().alias("value"))
-        .repartition(4)
-        .write.mode("overwrite")
-        .text(staging_dir)
-    )
-    poison = os.path.join(staging_dir, "part-poison.txt")
-    with open(poison, "w") as f:
-        for i in range(N_MALFORMED):
-            f.write(f"this is not json #{i}\n")
-    with open(marker, "w") as f:
-        f.write("ok")
-    return staging_dir
+    the Kafka topic's serialized values (producer.py:122 semantics) —
+    in a shared derived dir (data.derived). Injects N_MALFORMED
+    non-JSON lines so the validation path is actually exercised."""
+
+    def build(path: str) -> None:
+        (
+            load_table(spark, sf_dir, "events")
+            .select(encode_event().alias("value"))
+            .repartition(4)
+            .write.mode("overwrite")
+            .text(path)
+        )
+        with open(os.path.join(path, "part-poison.txt"), "w") as f:
+            for i in range(N_MALFORMED):
+                f.write(f"this is not json #{i}\n")
+
+    return derived(spark, sf_dir, "events_json", ("events",), build)
 
 
 # Config gate for the real Kafka bus (the reference's actual transport:
@@ -528,47 +525,42 @@ def running_totals_tws(spark: SparkSession, staging_dir: str) -> DataFrame:
 LATE_DAY = 10
 
 
-def stage_two_phase_events(
-    spark: SparkSession, sf_dir: str, staging_dir: str
-) -> str:
-    """Stage events as TWO ordered files: phase1 = every event NOT on
-    day LATE_DAY (older mtime), phase2 = the day-LATE_DAY events
-    (newer mtime). With maxFilesPerTrigger=1 and the file source's
-    oldest-first ordering, a watermarked stream processes phase1
-    first — advancing the watermark to (max phase-1 ts - delay) —
-    and only then sees phase2, whose events are days below the
-    watermark: the deterministic late-arrival scenario ST3 is about.
-    Idempotent per staging_dir."""
+def stage_two_phase_events(spark: SparkSession, sf_dir: str) -> str:
+    """Stage events as TWO ordered files in a shared derived dir:
+    phase1.txt = every event NOT on day LATE_DAY (older mtime),
+    phase2.txt = the day-LATE_DAY events (newer mtime). With
+    maxFilesPerTrigger=1 and the file source's oldest-first ordering,
+    a watermarked stream processes phase1 first — advancing the
+    watermark to (max phase-1 ts - delay) — and only then sees phase2,
+    whose events are days below the watermark: the deterministic
+    late-arrival scenario ST3 is about."""
     import glob
     import time
 
-    marker = os.path.join(staging_dir, "_STAGED2")
-    if os.path.exists(marker):
-        return staging_dir
-    ev = load_table(spark, sf_dir, "events")
-    is_late = F.dayofmonth("ts") == LATE_DAY
+    def build(path: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        is_late = F.dayofmonth("ts") == LATE_DAY
 
-    def _write_phase(df: DataFrame, leaf: str) -> str:
-        tmp = os.path.join(staging_dir, f"_tmp_{leaf}")
-        (
-            df.select(encode_event().alias("value"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .text(tmp)
-        )
-        dest = os.path.join(staging_dir, leaf)
-        shutil.move(glob.glob(os.path.join(tmp, "part-*"))[0], dest)
-        shutil.rmtree(tmp)
-        return dest
+        def _write_phase(df: DataFrame, leaf: str) -> str:
+            tmp = os.path.join(path, f"_tmp_{leaf}")
+            (
+                df.select(encode_event().alias("value"))
+                .coalesce(1)
+                .write.mode("overwrite")
+                .text(tmp)
+            )
+            dest = os.path.join(path, leaf)
+            shutil.move(glob.glob(os.path.join(tmp, "part-*"))[0], dest)
+            shutil.rmtree(tmp)
+            return dest
 
-    p1 = _write_phase(ev.where(~is_late), "phase1.txt")
-    p2 = _write_phase(ev.where(is_late), "phase2.txt")
-    # mtime drives the file source's processing order (path order
-    # agrees as a tiebreak); only RELATIVE order matters, so wall
-    # clock here cannot reach any query result.
-    now = time.time()
-    os.utime(p1, (now - 100, now - 100))
-    os.utime(p2, (now, now))
-    with open(marker, "w") as f:
-        f.write("ok")
-    return staging_dir
+        p1 = _write_phase(ev.where(~is_late), "phase1.txt")
+        p2 = _write_phase(ev.where(is_late), "phase2.txt")
+        # mtime drives the file source's processing order (path order
+        # agrees as a tiebreak); only RELATIVE order matters, so wall
+        # clock here cannot reach any query result.
+        now = time.time()
+        os.utime(p1, (now - 100, now - 100))
+        os.utime(p2, (now, now))
+
+    return derived(spark, sf_dir, "events_two_phase", ("events",), build)

@@ -176,9 +176,9 @@ def test_lifecycle_ops_are_idempotent_and_selective(spark, sf_dir):
         for r in _run(spark, sf_dir, "store_gdpr_erase").collect()
     }
     # untouched-partition file inventory after first erase
-    from big_data_final_project_spark.queries.timeseries import _lifecycle_store
+    from big_data_final_project_spark.queries.timeseries import _partitioned_store
 
-    store = _lifecycle_store(spark, sf_dir, "gdpr")
+    store = _partitioned_store(spark, sf_dir, "store_gdpr", private=True)
     untouched_days = [d for d, _, rw in first if not rw]
     inventory = {
         d: sorted(glob.glob(os.path.join(store, f"event_date={d.isoformat()}", "*")))

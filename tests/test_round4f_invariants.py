@@ -317,12 +317,16 @@ def test_scd2_live_history_invariants(spark, sf_dir):
         assert current[0]["version"] == len(h)
     # the maintenance really was incremental: the checkpoint shows
     # multiple micro-batches (one per staged file)
-    ckpt = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_stream_{sf_dir_tag(sf_dir)}_{os.getpid()}",
-        "scd2_ckpt",
-        "offsets",
+    import glob
+
+    (work,) = glob.glob(
+        os.path.join(
+            tempfile.gettempdir(),
+            f"spark_graft_derived_{sf_dir_tag(sf_dir)}",
+            f"scd2_*_{os.getpid()}",
+        )
     )
+    ckpt = os.path.join(work, "ckpt", "offsets")
     batches = [f for f in os.listdir(ckpt) if not f.startswith(".")]
     assert len(batches) >= 2, batches
 

@@ -3,10 +3,17 @@ engine's generated code cached."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_final_project_spark.session import CODEGEN_CACHE_ENTRIES, get_spark
+from big_data_final_project_spark.session import (
+    _JVM_SIZE,
+    CODEGEN_CACHE_ENTRIES,
+    DEFAULT_DRIVER_MEM,
+    get_spark,
+)
 
 
 @pytest.mark.parametrize("value", ["abc", "4.5", "0", "-2", ""])
@@ -21,6 +28,14 @@ def test_malformed_driver_mem_names_the_variable(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", value)
     with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
         get_spark()
+
+
+def test_default_driver_mem_fits_the_machine():
+    assert _JVM_SIZE.fullmatch(DEFAULT_DRIVER_MEM)
+    assert DEFAULT_DRIVER_MEM.endswith("m")
+    mb = int(DEFAULT_DRIVER_MEM[:-1])
+    assert mb <= 16 << 10
+    assert mb << 20 <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
 def _compiles(spark) -> int:

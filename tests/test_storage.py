@@ -99,6 +99,15 @@ def test_ingest_mirror_rechunks_big_tables(spark):
     assert any("/testdata/" in f for f in files), files
 
 
+def _mirror_dir(df) -> str:
+    """The dir a mirrored table's DataFrame reads from."""
+    import os
+
+    dirs = {os.path.dirname(f.removeprefix("file:")) for f in df.inputFiles()}
+    assert len(dirs) == 1, dirs
+    return dirs.pop()
+
+
 def test_mirror_is_content_keyed_and_sweeps_stale_versions(spark, tmp_path):
     """Round-4 (ADVICE): the mirror is keyed on source content
     (path+mtime+size), shared across processes, and superseded
@@ -107,11 +116,7 @@ def test_mirror_is_content_keyed_and_sweeps_stale_versions(spark, tmp_path):
     import os
     import shutil
 
-    from big_data_final_project_spark.data import (
-        _clean_stale_mirrors,
-        _mirror_root,
-        load_table,
-    )
+    from big_data_final_project_spark.data import derived, load_table
 
     src = "/root/testdata/sf0.1"
     sf = tmp_path / "sfcopy"
@@ -120,26 +125,27 @@ def test_mirror_is_content_keyed_and_sweeps_stale_versions(spark, tmp_path):
         shutil.copy(f"{src}/{t}.parquet", sf / f"{t}.parquet")
     sf_dir = str(sf)
 
-    m1 = _mirror_root(sf_dir, "events")
     df1 = load_table(spark, sf_dir, "events")
+    m1 = _mirror_dir(df1)
     n1 = df1.count()
     assert os.path.exists(m1)
 
     # same source bytes -> same mirror path (shared, not rebuilt)
-    assert _mirror_root(sf_dir, "events") == m1
+    assert _mirror_dir(load_table(spark, sf_dir, "events")) == m1
 
     # touch the source (new mtime) -> new key; old version swept on build
     os.utime(sf / "events.parquet", (1, 1))
-    m2 = _mirror_root(sf_dir, "events")
-    assert m2 != m1
     df2 = load_table(spark, sf_dir, "events")
+    m2 = _mirror_dir(df2)
+    assert m2 != m1
     assert df2.count() == n1
     assert os.path.exists(m2)
     assert not os.path.exists(m1)  # superseded version got swept
 
     # sweep of another table's versions never touches this one
-    _clean_stale_mirrors(sf_dir, "region")
+    derived(spark, sf_dir, "region", ("region",), lambda path: None)
     assert os.path.exists(m2)
+    shutil.rmtree(os.path.dirname(m2))
 
 
 def test_materialize_modes_agree(spark, sf_dir, tmp_path):

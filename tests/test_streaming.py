@@ -23,9 +23,8 @@ from big_data_final_project_spark.streaming.pipeline import (
 
 
 @pytest.fixture(scope="module")
-def staging(spark, sf_dir, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("staging"))
-    return stage_events_as_json(spark, sf_dir, d)
+def staging(spark, sf_dir):
+    return stage_events_as_json(spark, sf_dir)
 
 
 def test_persist_exactly_once_across_replays(spark, sf_dir, staging, tmp_path_factory):
@@ -358,16 +357,16 @@ def test_minhash_screen_streams_in_multiple_batches(spark, sf_dir):
     out = catalog()["streaming_minhash_screen_live"].fn(spark, sf_dir)
     n_rows = out.count()
     assert n_rows > 0
-    import tempfile
-
     from big_data_final_project_spark.data import sf_dir_tag
 
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_stream_{sf_dir_tag(sf_dir)}_{os.getpid()}",
-        "mh_store",
+    (work,) = glob.glob(
+        os.path.join(
+            tempfile.gettempdir(),
+            f"spark_graft_derived_{sf_dir_tag(sf_dir)}",
+            f"mh_screen_*_{os.getpid()}",
+        )
     )
-    batch_dirs = glob.glob(os.path.join(store, "batch_id=*"))
+    batch_dirs = glob.glob(os.path.join(work, "store", "batch_id=*"))
     assert len(batch_dirs) >= 2, batch_dirs
 
 
