@@ -309,10 +309,7 @@ def salted_skew_join(
     (SCALE.md r9): Spark's ReuseExchange does NOT fire across the
     broadcast/shuffle boundary, so without staging the whole build
     aggregate (a full pass over the probe) would run twice. The build
-    is the per-key aggregate — the smallest frame in the query — and
-    the staging mode follows the session's materialize() contract
-    ('table' on a cluster: the gram/key dictionary is an artifact
-    worth persisting anyway)."""
+    is the per-key aggregate — the smallest frame in the query."""
     from .scale import materialize
 
     for col in ("_hot", "_salt"):

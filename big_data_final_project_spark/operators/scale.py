@@ -1,4 +1,5 @@
-"""Partition-layout helpers (scale hygiene, SURVEY.md §7 M6).
+"""Partition-layout and lineage-cut helpers (scale hygiene, SURVEY.md
+§7 M6).
 
 ``spark.sql.files.maxPartitionBytes`` sizes scan partitions for
 IO-bound work; CPU-heavy per-row operators (shingling, signature
@@ -6,140 +7,29 @@ hashing, per-pair similarity) on byte-small inputs then inherit a
 single partition and run on one core. ``spread`` widens such a
 DataFrame to at least the cluster's parallelism — and never *shrinks*
 an already-wide input, so at real scale (thousands of scan
-partitions) it is a no-op rather than a bottleneck."""
+partitions) it is a no-op rather than a bottleneck.
+
+``materialize`` is the one lineage cut every query module uses, and
+``session_cached`` shares a materialized intermediate across the
+queries of one session."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame
 
-# Pipeline-breaker seam (VERDICT r4 #5). Every query module that needs
-# a materialized intermediate (self-joined signature tables, iterative
-# lineage cuts, read-3x relations) routes through materialize() instead
-# of calling localCheckpoint directly, so the bench-vs-cluster choice
-# is ONE tested config switch, not 90 scattered call sites.
-MATERIALIZE_MODE_CONF = "spark.bdfp.materialize.mode"  # local|reliable|table
-MATERIALIZE_DIR_CONF = "spark.bdfp.materialize.dir"
 
-
-def materialize(
-    df: DataFrame,
-    *,
-    bucket_by: tuple[str, ...] | None = None,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Eagerly materialize ``df`` and cut its lineage; mode chosen by
-    session conf ``spark.bdfp.materialize.mode``:
-
-    * ``local`` (default): ``localCheckpoint(eager=True)`` — blocks
-      live in executor-local storage. Fastest; right for single-node
-      bench runs, but NOT fault-tolerant (an executor loss kills the
-      job instead of recomputing).
-    * ``reliable``: ``checkpoint(eager=True)`` to the reliable
-      checkpoint directory (auto-set under ``spark.bdfp.materialize.dir``
-      if unset) — survives executor loss; the cluster default.
-    * ``table``: write parquet under ``spark.bdfp.materialize.dir`` and
-      read it back — the 100 TB posture for intermediates that are
-      re-read across jobs (signature tables, edge lists): durable,
-      shareable, and the re-read gets scan-level column pruning.
-      Staging lifecycle (TTL sweep) is the deployment's job; bench
-      runs land in a per-app temp dir.
-
-    ``bucket_by`` (VERDICT r6 #5) declares the intermediate's
-    DOWNSTREAM JOIN KEY: in ``table`` mode the stage is written
-    bucketed+sorted on those columns (``bucketBy``/``sortBy`` +
-    ``saveAsTable`` with an external path in the staging dir), so
-    every re-read join or aggregate on that key consumes the scan's
-    HashPartitioning directly — no Exchange on the staged side, per
-    iteration, ever (asserted in tests/test_storage.py). Iterative
-    consumers (PageRank's adjacency, CC's edge list) re-read the
-    stage once per round; plain parquet re-pays a full shuffle of the
-    big side each round, bucketing pays it once at write. ``local``
-    and ``reliable`` modes ignore the hint — localCheckpoint/
-    checkpoint already preserve the partitioning they captured.
-    ``n_buckets`` defaults to the session's shuffle partitions so the
-    probe side shuffles to a matching layout.
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage:
+    ``localCheckpoint(eager=True)``. A self-joined or iteratively
+    re-read intermediate is then computed once, and the cut frame keeps
+    the partitioning it was computed with. The blocks live in
+    executor-local storage, so this is not fault-tolerant: an executor
+    loss fails the job instead of recomputing the lost blocks.
 
     Used as ``df.transform(materialize)`` so call sites keep the
     method-chain shape the query code reads in.
     """
-    spark = df.sparkSession
-    mode = spark.conf.get(MATERIALIZE_MODE_CONF, "local")
-    if mode == "local":
-        return df.localCheckpoint(eager=True)
-    base = spark.conf.get(
-        MATERIALIZE_DIR_CONF,
-        os.path.join(
-            tempfile.gettempdir(),
-            f"bdfp_materialize_{spark.sparkContext.applicationId}",
-        ),
-    )
-    if mode == "reliable":
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(os.path.join(base, "checkpoints"))
-        return df.checkpoint(eager=True)
-    if mode == "table":
-        _evict_dead_staging(spark)
-        stage_id = uuid.uuid4().hex
-        path = os.path.join(base, "staged", stage_id)
-        if bucket_by:
-            n = n_buckets or int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            # Pre-shuffle onto the bucket layout so each task owns
-            # whole buckets: one file per bucket instead of
-            # (tasks x buckets) small files, and the write's shuffle
-            # REPLACES the first downstream join's exchange rather
-            # than adding to it.
-            (
-                df.repartition(n, *bucket_by)
-                .write.format("parquet")
-                .bucketBy(n, *bucket_by)
-                .sortBy(*bucket_by)
-                .option("path", path)
-                .saveAsTable(f"bdfp_staged_{stage_id}")
-            )
-            out = spark.table(f"bdfp_staged_{stage_id}")
-        else:
-            df.write.parquet(path)
-            out = spark.read.parquet(path)
-        _STAGED_PATHS.setdefault(
-            spark.sparkContext.applicationId, []
-        ).append((path, f"bdfp_staged_{stage_id}" if bucket_by else None))
-        return out
-    raise ValueError(
-        f"unknown {MATERIALIZE_MODE_CONF}={mode!r} (local|reliable|table)"
-    )
-
-
-# Staging-dir lifecycle for table mode. Staged parquet CANNOT be
-# deleted while its session lives (the returned DataFrame re-reads the
-# path lazily on every downstream job), so the in-process lifecycle is
-# session-scoped: every table-mode call records its (path, table name)
-# under the current applicationId, and entries recorded by DEAD
-# sessions are swept on the next call (same eviction rhythm as
-# session_cached below) — BOTH the directory and the bucketed stage's
-# catalog entry (ADVICE r7: dropping only dirs accumulated unbounded
-# bdfp_staged_* tables, dangling at swept paths in any persistent
-# metastore). Iterative queries therefore stage O(iterations) dirs
-# while running and drop to zero once a new session takes over;
-# long-lived cluster deployments still run their own TTL sweep over
-# the staging root.
-_STAGED_PATHS: dict[str, list[tuple[str, str | None]]] = {}
-
-
-def _evict_dead_staging(spark) -> None:
-    app = spark.sparkContext.applicationId
-    for dead in [a for a in _STAGED_PATHS if a != app]:
-        for path, table in _STAGED_PATHS.pop(dead):
-            if table is not None:
-                spark.sql(f"DROP TABLE IF EXISTS {table}")
-            shutil.rmtree(path, ignore_errors=True)
+    return df.localCheckpoint(eager=True)
 
 
 # Shared session-scoped intermediate-table cache (banded signatures,

@@ -1170,12 +1170,8 @@ def _cluster_map_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.unionByName(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # One pair computation feeds every iteration: materialize it —
-    # bucketed on `src`, the key every round's join probes, so in
-    # table mode (100 TB posture) the edge side is never re-shuffled
-    # (VERDICT r6 #5); label frames change per round and shuffle to
-    # the bucket layout instead.
-    edges = materialize(edges, bucket_by=("src",))
+    # One pair computation feeds every iteration: materialize it.
+    edges = materialize(edges)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()

@@ -279,11 +279,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj_deg = adj.join(
         deg.withColumnRenamed("node", "u2"), F.col("u") == F.col("u2")
     ).select("u", "v", "d")
-    # Bucketed on `u`, the key every iteration's join probes: in table
-    # mode the adjacency is written bucketed+sorted once and never
-    # re-shuffled on re-read (VERDICT r6 #5); only the per-round rank
-    # frame shuffles.
-    adj_deg = materialize(adj_deg, bucket_by=("u",))
+    # Every round re-reads the adjacency: materialize it once.
+    adj_deg = materialize(adj_deg)
     for _ in range(3):
         contrib = adj_deg.join(ranks, adj_deg["u"] == ranks["node"]).select(
             F.col("v"),
@@ -1593,11 +1590,8 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj_deg = adj.join(
         deg.withColumnRenamed("node", "u2"), F.col("u") == F.col("u2")
     ).select("u", "v", "d")
-    # Bucketed on `u`, the key every iteration's join probes: in table
-    # mode the adjacency is written bucketed+sorted once and never
-    # re-shuffled on re-read (VERDICT r6 #5); only the per-round rank
-    # frame shuffles.
-    adj_deg = materialize(adj_deg, bucket_by=("u",))
+    # Every round re-reads the adjacency: materialize it once.
+    adj_deg = materialize(adj_deg)
     nodes = deg.select("node").transform(materialize)
     for _ in range(3):
         contrib = adj_deg.join(ranks, adj_deg["u"] == ranks["node"]).select(

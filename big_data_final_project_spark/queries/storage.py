@@ -1018,9 +1018,8 @@ def store_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE shuffle join on the merge key (at lakehouse
     scale this is the same co-partitioned join Delta/Iceberg MERGE
-    compiles to, minus their file-rewrite bookkeeping — bucketed
-    staging via operators/scale.materialize(bucket_by=...) gives the
-    co-location); cents arithmetic keeps the audit integer-exact."""
+    compiles to, minus their file-rewrite bookkeeping); cents
+    arithmetic keeps the audit integer-exact."""
     o = load_table(spark, sf_dir, "orders")
     cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
     base = o.where(F.col("o_orderkey") % 4 != 3).select(

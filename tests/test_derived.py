@@ -178,7 +178,7 @@ def test_only_data_and_scale_own_temp_paths():
     module finds the temp dir, and no query or streaming module trusts
     a marker file."""
     pkg = os.path.dirname(big_data_final_project_spark.__file__)
-    owners = {"data.py", os.path.join("operators", "scale.py")}
+    owners = {"data.py"}
     markers = {"_built", "_STAGED", "_STAGED2", "_DONE", "_staged.ok"}
     found = []
     for f in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):

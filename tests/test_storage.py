@@ -1,12 +1,13 @@
 """Storage-layout evidence: z-order clustering actually tightens
 per-file min/max statistics (the thing row-group skipping prunes on),
-and bucketed tables round-trip the join correctly (the no-Exchange
-plan shape is asserted in test_plans.py)."""
+and bucketed tables join with the plain join's rows and no shuffle
+Exchange (the registered query's plan is asserted in test_plans.py)."""
 
 from __future__ import annotations
 
 import glob
 import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -60,18 +61,38 @@ def test_zorder_files_have_tight_bounding_boxes(spark, sf_dir, tmp_path):
 
 
 def test_bucketed_tables_join_matches_plain_join(spark, sf_dir):
+    """The same-bucketed pair joins with the same rows as the plain
+    tables, and with broadcast disabled (at real scale neither fact
+    side fits a broadcast) the raw join plans as one sort-merge join
+    with ZERO shuffle Exchanges: the write-time shuffle, paid once,
+    replaces the per-query shuffle."""
+    from big_data_final_project_spark.plans.audit import audit
     from big_data_final_project_spark.queries.storage import _bucketed_pair
 
     li_name, o_name = _bucketed_pair(spark, sf_dir)
-    got = (
-        spark.table(li_name)
-        .join(spark.table(o_name), F.col("l_orderkey") == F.col("o_orderkey"))
-        .count()
-    )
+
+    def bucketed():
+        # a fresh frame per use: an executed frame keeps the plan it
+        # was planned with, whatever the confs are afterwards
+        return spark.table(li_name).join(
+            spark.table(o_name), F.col("l_orderkey") == F.col("o_orderkey")
+        )
+
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    want = li.join(o, li["l_orderkey"] == o["o_orderkey"]).count()
-    assert got == want
+    plain = li.join(o, li["l_orderkey"] == o["o_orderkey"])
+    got = Counter(map(tuple, bucketed().collect()))
+    assert got == Counter(map(tuple, plain.collect()))
+    assert got
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        facts = audit(bucketed())
+        assert facts.shuffles == 0, facts.text
+        assert facts.sortmerge_joins == 1, facts.text
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_ingest_mirror_rechunks_big_tables(spark):
@@ -146,129 +167,3 @@ def test_mirror_is_content_keyed_and_sweeps_stale_versions(spark, tmp_path):
     derived(spark, sf_dir, "region", ("region",), lambda path: None)
     assert os.path.exists(m2)
     shutil.rmtree(os.path.dirname(m2))
-
-
-def test_materialize_modes_agree(spark, sf_dir, tmp_path):
-    """The materialize() seam (VERDICT r4 #5): the same query produces
-    identical results whether intermediates go through localCheckpoint
-    (bench default), reliable checkpoint (cluster), or parquet staging
-    (100 TB posture) — proving the mode switch changes durability, not
-    semantics."""
-    from big_data_final_project_spark.operators.scale import (
-        MATERIALIZE_DIR_CONF,
-        MATERIALIZE_MODE_CONF,
-    )
-    from big_data_final_project_spark.registry import catalog
-
-    # two shapes: a single materialized re-read intermediate (tfidf)
-    # and an iterative per-round lineage cut (connected components —
-    # the seam's hardest case: checkpoints inside a convergence loop)
-    cat = catalog()
-    # graph_pagerank and dedup_clusters stage bucket_by intermediates
-    # (round 7), so this loop also proves bucketed-table staging
-    # changes layout, not semantics.
-    for qname in ("text_tfidf_top_terms", "dedup_clusters", "graph_pagerank"):
-        q = cat[qname]
-
-        def run():
-            # session_cached would serve the local-mode frame across
-            # modes; clear it so each mode rebuilds through the seam
-            from big_data_final_project_spark.operators.scale import (
-                _SESSION_CACHE,
-            )
-
-            _SESSION_CACHE.clear()
-            return sorted(map(tuple, q.fn(spark, sf_dir).collect()))
-
-        base = run()  # default: local
-        assert base, f"{qname} returned no rows"
-        spark.conf.set(MATERIALIZE_DIR_CONF, str(tmp_path))
-        try:
-            for mode in ("reliable", "table"):
-                spark.conf.set(MATERIALIZE_MODE_CONF, mode)
-                assert run() == base, f"{qname} mode {mode} diverged"
-        finally:
-            spark.conf.unset(MATERIALIZE_MODE_CONF)
-            spark.conf.unset(MATERIALIZE_DIR_CONF)
-
-
-def test_table_mode_evicts_dead_session_staging(spark, tmp_path):
-    """VERDICT r6 #2 + ADVICE r7: table-mode staging recorded by a
-    DEAD session is swept on the next table-mode call — the directory
-    AND the bucketed stage's catalog table (dirs-only eviction
-    accumulated unbounded bdfp_staged_* entries dangling at swept
-    paths) — while the live session's own staged paths stay readable
-    (the returned frame re-reads lazily)."""
-    from big_data_final_project_spark.operators import scale
-
-    dead_dir = tmp_path / "dead_staged"
-    dead_dir.mkdir()
-    (dead_dir / "part-0.parquet").write_bytes(b"x")
-    # a dead session's BUCKETED stage also left a catalog table
-    spark.range(3).write.option(
-        "path", str(tmp_path / "dead_tbl")
-    ).saveAsTable("bdfp_staged_deadbeef")
-    scale._STAGED_PATHS["application_dead_0001"] = [
-        (str(dead_dir), None),
-        (str(tmp_path / "dead_tbl"), "bdfp_staged_deadbeef"),
-    ]
-
-    spark.conf.set(scale.MATERIALIZE_MODE_CONF, "table")
-    spark.conf.set(scale.MATERIALIZE_DIR_CONF, str(tmp_path / "staging"))
-    try:
-        out = scale.materialize(spark.range(5).selectExpr("id AS v"))
-        assert sorted(r.v for r in out.collect()) == [0, 1, 2, 3, 4]
-    finally:
-        spark.conf.unset(scale.MATERIALIZE_MODE_CONF)
-        spark.conf.unset(scale.MATERIALIZE_DIR_CONF)
-
-    assert not dead_dir.exists(), "dead session's staging not evicted"
-    assert "application_dead_0001" not in scale._STAGED_PATHS
-    assert not spark.catalog.tableExists(
-        "bdfp_staged_deadbeef"
-    ), "dead session's staged catalog table not dropped"
-    app = spark.sparkContext.applicationId
-    live = scale._STAGED_PATHS.get(app, [])
-    assert live and all(
-        __import__("os").path.isdir(p) for p, _t in live
-    ), "live session's staged path must survive eviction"
-
-
-def test_table_mode_bucketed_staging_avoids_exchange(spark, tmp_path):
-    """VERDICT r6 #5: a table-mode stage declared with bucket_by is
-    written bucketed+sorted on the join key, so the re-read join
-    consumes the scan's HashPartitioning — NO Exchange on the staged
-    side (only the probe side shuffles), while a plain parquet stage
-    pays Exchanges on both sides. Rows are identical either way."""
-    from big_data_final_project_spark.operators import scale
-
-    spark.conf.set(scale.MATERIALIZE_MODE_CONF, "table")
-    spark.conf.set(scale.MATERIALIZE_DIR_CONF, str(tmp_path / "staging"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        big = spark.range(0, 20000).selectExpr("id % 97 AS u", "id AS payload")
-        probe = spark.range(0, 97).selectExpr("id AS u", "id * 2 AS r")
-
-        plain = scale.materialize(big)
-        bucketed = scale.materialize(big, bucket_by=("u",), n_buckets=8)
-
-        def n_shuffles(df):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return plan.count("Exchange hashpartitioning")
-
-        j_plain = plain.join(probe, "u")
-        j_bucketed = bucketed.join(probe, "u")
-        assert n_shuffles(j_plain) == 2, "plain staging should shuffle both sides"
-        assert n_shuffles(j_bucketed) == 1, (
-            "bucketed staging must not re-shuffle the staged side"
-        )
-        assert sorted(map(tuple, j_plain.collect())) == sorted(
-            map(tuple, j_bucketed.collect())
-        )
-        # aggregation on the bucket key also rides the bucketing
-        agg = bucketed.groupBy("u").count()
-        assert n_shuffles(agg) == 0
-    finally:
-        spark.conf.unset(scale.MATERIALIZE_MODE_CONF)
-        spark.conf.unset(scale.MATERIALIZE_DIR_CONF)
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
