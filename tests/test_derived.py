@@ -175,27 +175,37 @@ def test_second_read_of_partitioned_store_runs_no_job(spark, sf_dir):
 
 def test_only_data_and_scale_own_temp_paths():
     """Derived scratch data has one builder, data.derived: no other
-    module finds the temp dir, and no query or streaming module trusts
-    a marker file."""
+    module or tool finds the temp dir or names a path under /tmp, and
+    no query, streaming module or tool trusts a marker file."""
     pkg = os.path.dirname(big_data_final_project_spark.__file__)
+    repo = os.path.dirname(pkg)
     owners = {"data.py"}
     markers = {"_built", "_STAGED", "_STAGED2", "_DONE", "_staged.ok"}
+    tool_markers = {"_NULLED_OK", "_NONFINITE_OK", "_UNICODE_OK", "_SKEWED_OK", "_CONTENT_OK"}
+    files = {
+        os.path.relpath(f, pkg): f
+        for f in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    }
+    files.update(
+        (os.path.relpath(f, repo), f) for f in glob.glob(os.path.join(repo, "tools", "*.py"))
+    )
     found = []
-    for f in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        rel = os.path.relpath(f, pkg)
+    for rel, f in files.items():
         with open(f) as fh:
-            tree = ast.parse(fh.read())
-        for node in ast.walk(tree):
+            text = fh.read()
+        is_tool = rel.split(os.sep)[0] == "tools"
+        found += [(rel, m) for m in tool_markers if is_tool and m in text]
+        for node in ast.walk(ast.parse(text)):
             if rel not in owners and (
                 (isinstance(node, ast.Attribute) and node.attr == "gettempdir")
                 or (isinstance(node, ast.alias) and node.name in ("tempfile", "gettempdir"))
             ):
                 found.append((rel, node.lineno))
+            if not isinstance(node, ast.Constant) or not isinstance(node.value, str):
+                continue
             if (
-                rel.split(os.sep)[0] in ("queries", "streaming")
-                and isinstance(node, ast.Constant)
-                and node.value in markers
-            ):
+                rel.split(os.sep)[0] in ("queries", "streaming") and node.value in markers
+            ) or (is_tool and node.value.startswith("/tmp/")):
                 found.append((rel, node.lineno))
     assert found == []
 

@@ -19,7 +19,7 @@ from tools.invariance_sweep import (
     LAYOUTS,
     _result_hash,
 )
-from tools.unicode_sweep import generate as unicode_generate
+from tools.unicode_sweep import unicode_variant
 
 # Representative non-streaming slice: one query per layout-sensitive
 # mechanism class (decimal-exact money sums, multi-key hash agg,
@@ -90,13 +90,12 @@ def test_contract_exempt_is_exactly_the_documented_sampler():
         assert "registry.py" in reason
 
 
-def test_unicode_variant_generation(tmp_path):
+def test_unicode_variant_generation(spark):
     """Injection is deterministic and keeps the n_chars==length(text)
     invariant (codepoints on Python, Spark, and DuckDB alike)."""
     import duckdb
 
-    out = str(tmp_path / "uni")
-    stats = unicode_generate("/root/testdata/sf0.001", out)
+    out, stats = unicode_variant(spark, "/root/testdata/sf0.001")
     d = stats["documents"]
     assert d["n_rows"] == 500
     assert d["n_replaced"] == 21  # doc_id % 24 == 17 over 0..499
@@ -118,15 +117,14 @@ def test_unicode_variant_generation(tmp_path):
 
 
 @pytest.mark.parametrize("name", UNICODE_MINI)
-def test_unicode_mini_differential(spark, name, tmp_path_factory):
+def test_unicode_mini_differential(spark, name):
     """Spark == DuckDB on the unicode-injected corpus for the text /
     dedup / curation operators that consume documents.text."""
     from tests.oracle_utils import compare_frames, duck_connection
 
     from big_data_final_project_spark.registry import catalog
 
-    out = str(tmp_path_factory.getbasetemp() / "uni_shared")
-    unicode_generate("/root/testdata/sf0.001", out)
+    out, _ = unicode_variant(spark, "/root/testdata/sf0.001")
     q = catalog()[name]
     spark_pdf = q.fn(spark, out).toPandas()
     con = duck_connection(out)

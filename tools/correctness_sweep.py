@@ -6,8 +6,7 @@ The driver's CORRECTNESS_r{N}.json samples a fixed 50-query subset
 driver-visible row (VERDICT r4 "What's missing" #1). This tool runs
 the SAME Spark-vs-DuckDB differential (tests/oracle_utils — rows,
 column set, exact order-insensitive values) over EVERY registered
-query at the driver's scale (sf0.01 by default) and writes
-CORRECTNESS_SWEEP.json with one driver-format record per query:
+query and writes one driver-format record per query:
 
     {"rows_match": bool|null, "schema_match": bool|null,
      "hash_match": bool|null, "spark_rows": int,
@@ -16,14 +15,24 @@ CORRECTNESS_SWEEP.json with one driver-format record per query:
 Rows-only queries (no SQL oracle) get the driver's "no_oracle" record
 with their executed row count. Regenerated each round and committed —
 like BENCH_SWEEP.json — so a judge can confirm all oracle-paired
-queries at sf0.01 from the repo without a multi-hour rerun.
+queries from the repo without a multi-hour rerun. The sf dir picks
+the artifact: sf0.01 (the driver's scale) writes CORRECTNESS_SWEEP.json,
+sf0.1 writes CORRECTNESS_SF01.json; any other dir is rejected.
+
+It also holds the one record loop every sweep tool runs on
+(``run_records``): each finished record is appended to the shard as
+one JSON line and fsynced, and a re-run skips the names whose record
+already passed at the current source digest. A killed sweep therefore
+resumes where it died, and a failed one repeats only its failures.
 
 Usage:
     python tools/correctness_sweep.py run <shard> <n_shards> [sf_dir]
-        -> writes CORRECTNESS_SWEEP.shard<shard>of<n>.json
-    python tools/correctness_sweep.py merge <n_shards>
-        -> merges shards into CORRECTNESS_SWEEP.json (registry order),
-           exits nonzero if any query failed or any shard is missing
+        -> appends to CORRECTNESS_SWEEP.shard<shard>of<n>.jsonl
+           (resumes it if present)
+    python tools/correctness_sweep.py merge <n_shards> [sf_dir]
+        -> merges shards into the artifact (registry order), exits
+           nonzero if any query failed or any shard is missing; the
+           shards are kept when any record failed
 """
 
 from __future__ import annotations
@@ -34,12 +43,19 @@ import os
 import subprocess
 import sys
 import time
+from typing import Callable, Iterable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_artifacts import source_digest  # noqa: E402
+
+DEFAULT_SF_DIR = "/root/testdata/sf0.01"
+# Artifact base per sf dir name.
+ARTIFACT_BASES = {"sf0.01": "CORRECTNESS_SWEEP", "sf0.1": "CORRECTNESS_SF01"}
+# A record with one of these errs passed.
+PASSED = (None, "no_oracle")
 
 
 def git_head() -> str:
@@ -48,8 +64,119 @@ def git_head() -> str:
     ).stdout.strip()
 
 
-def _shard_path(shard: int, n: int, base: str = "CORRECTNESS_SWEEP") -> str:
-    return os.path.join(REPO, f"{base}.shard{shard}of{n}.json")
+def shard_path(base: str, part: str = "") -> str:
+    return os.path.join(REPO, f"{base}.shard{part}.jsonl")
+
+
+def read_shard(path: str) -> dict[str, dict]:
+    """name -> record from a shard; the last line per name wins and a
+    torn line (the writer was killed mid-append) is ignored."""
+    records: dict[str, dict] = {}
+    if os.path.exists(path):
+        with open(path) as fh:
+            for line in fh:
+                try:
+                    name, rec = json.loads(line)
+                except ValueError:
+                    continue
+                records[name] = rec
+    return records
+
+
+def failures(records: dict[str, dict]) -> list[str]:
+    return [n for n, r in records.items() if r["err"] not in PASSED]
+
+
+def run_records(
+    names: Iterable[str], record: Callable[[str], dict], shard: str
+) -> dict[str, dict]:
+    """``record(name)`` for each name, in order, stamped with the
+    source digest and appended to ``shard`` as it finishes. Names whose
+    last record in ``shard`` passed at the current digest are skipped;
+    failed and stale ones run again."""
+    digest = source_digest()
+    done = {
+        n: r
+        for n, r in read_shard(shard).items()
+        if r.get("source_digest") == digest and r.get("err") in PASSED
+    }
+    if os.path.exists(shard):
+        # drop a torn tail, so the next line starts on a line of its own
+        with open(shard, "rb+") as fh:
+            fh.truncate(fh.read().rfind(b"\n") + 1)
+    names = list(names)
+    out: dict[str, dict] = {}
+    with open(shard, "a") as fh:
+        for i, name in enumerate(names):
+            step = f"[{i + 1}/{len(names)}] {name}"
+            if name in done:
+                out[name] = done[name]
+                print(f"{step} skipped: passed at {digest[:12]}", flush=True)
+                continue
+            t0 = time.time()
+            rec = out[name] = {**record(name), "source_digest": digest}
+            fh.write(json.dumps([name, rec]) + "\n")
+            fh.flush()
+            os.fsync(fh.fileno())
+            ok = rec["err"] in PASSED
+            print(
+                f"{step} {time.time() - t0:.1f}s "
+                f"{'ok' if ok else 'FAIL ' + str(rec['err'])}",
+                flush=True,
+            )
+    return out
+
+
+def family_records(
+    spark, sf_dir: str, families: tuple[str, ...], shard: str
+) -> dict[str, dict]:
+    """Differential records of the registry queries whose names start
+    with one of ``families``, run on ``sf_dir`` through ``run_records``."""
+    from big_data_final_project_spark.registry import catalog
+
+    cat = catalog()
+    return run_records(
+        [n for n in cat if n.startswith(families)],
+        lambda n: _record(spark, sf_dir, n, cat[n]),
+        shard,
+    )
+
+
+def variant(
+    spark, src: str, name: str, build: Callable[[str], None], stats: str
+) -> tuple[str, dict]:
+    """``(dir, stats)`` of the injected copy of ``src`` that ``build``
+    writes: a ``data.derived`` dir keyed on every source table's content
+    and on the builder's code, so an edited table or tool rebuilds it."""
+    from big_data_final_project_spark.data import TABLES, derived
+
+    out = derived(spark, src, name, TABLES, build)
+    with open(os.path.join(out, stats)) as fh:
+        return out, json.load(fh)
+
+
+def publish(base: str, artifact: dict, fails: list[str], shards: list[str]) -> int:
+    """Write ``<base>.json``; drop the shards unless a record failed,
+    so a re-run repeats only the failures."""
+    with open(os.path.join(REPO, f"{base}.json"), "w") as fh:
+        json.dump(artifact, fh, indent=1)
+    if fails:
+        print(f"shards kept for the re-run: {shards}")
+        return 1
+    for path in shards:
+        if os.path.exists(path):
+            os.remove(path)
+    return 0
+
+
+def _artifact_base(sf_dir: str) -> str:
+    tag = os.path.basename(os.path.abspath(sf_dir))
+    if tag not in ARTIFACT_BASES:
+        raise SystemExit(
+            f"no correctness artifact for {sf_dir!r}: the sf dir must be "
+            f"named one of {sorted(ARTIFACT_BASES)}"
+        )
+    return ARTIFACT_BASES[tag]
 
 
 def _record(spark, sf_dir: str, name: str, q) -> dict:
@@ -104,15 +231,11 @@ def _record(spark, sf_dir: str, name: str, q) -> dict:
         }
 
 
-def run(
-    shard: int,
-    n_shards: int,
-    sf_dir: str,
-    base: str = "CORRECTNESS_SWEEP",
-) -> int:
+def run(shard: int, n_shards: int, sf_dir: str) -> int:
     from big_data_final_project_spark.registry import catalog
     from big_data_final_project_spark.session import get_spark
 
+    base = _artifact_base(sf_dir)
     cat = catalog()
     names = [
         n
@@ -120,83 +243,41 @@ def run(
         if int(hashlib.md5(n.encode()).hexdigest(), 16) % n_shards == shard
     ]
     spark = get_spark(app_name=f"csweep{shard}", shuffle_partitions=16)
-    # sf0.1 runs reuse this machinery via tools/sf01_sweep.py (base
-    # "CORRECTNESS_SF01") — same records, same digest stamps
+    # VERDICT r5 #1 / ADVICE r6: every record carries the SOURCE DIGEST
+    # it was produced at (content identity, not git ancestry; stamped by
+    # run_records); the commit is kept for provenance only.
     head = git_head()[:12]
-    digest = source_digest()
-    out: dict[str, dict] = {}
-    for i, name in enumerate(names):
-        t0 = time.time()
-        out[name] = _record(spark, sf_dir, name, cat[name])
-        # VERDICT r5 #1 / ADVICE r6: every record carries the SOURCE
-        # DIGEST it was produced at (content identity, not git
-        # ancestry), so an overlay-merged artifact can never silently
-        # vouch for code newer than the record; commit kept for
-        # provenance only.
-        out[name]["commit"] = head
-        out[name]["source_digest"] = digest
-        ok = out[name]["err"] in (None, "no_oracle")
-        print(
-            f"[{i + 1}/{len(names)}] {name} {time.time() - t0:.1f}s "
-            f"{'ok' if ok else 'FAIL ' + str(out[name]['err'])}",
-            flush=True,
-        )
-    with open(_shard_path(shard, n_shards, base), "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-    n_fail = sum(1 for r in out.values() if r["err"] not in (None, "no_oracle"))
+    out = run_records(
+        names,
+        lambda n: {**_record(spark, sf_dir, n, cat[n]), "commit": head},
+        shard_path(base, f"{shard}of{n_shards}"),
+    )
+    n_fail = len(failures(out))
     print(f"DONE shard {shard}: {len(out) - n_fail}/{len(out)} ok", flush=True)
     return 1 if n_fail else 0
 
 
-def merge(
-    n_shards: int,
-    sf_dir: str,
-    partial: bool = False,
-    base: str = "CORRECTNESS_SWEEP",
-) -> int:
+def merge(n_shards: int, sf_dir: str) -> int:
     from big_data_final_project_spark.registry import catalog
 
-    # ALL shards are required by default (ADVICE r5: the overlay path
-    # let a stale 'pass' record survive a code change). An explicit
-    # --partial overlays fresh shards onto the committed artifact —
-    # for adding a few new queries mid-round — and the per-record
-    # commit stamps plus tools/check_artifacts.py keep that honest.
+    # ALL shards are required (ADVICE r5: an overlay onto the committed
+    # artifact let a stale 'pass' record survive a code change).
+    base = _artifact_base(sf_dir)
+    shards = [shard_path(base, f"{s}of{n_shards}") for s in range(n_shards)]
+    missing_shards = [p for p in shards if not os.path.exists(p)]
+    if missing_shards:
+        print(f"missing shards {missing_shards}; run them", file=sys.stderr)
+        return 2
     merged: dict[str, dict] = {}
-    if partial:
-        prev_path = os.path.join(REPO, f"{base}.json")
-        if os.path.exists(prev_path):
-            with open(prev_path) as fh:
-                merged.update(json.load(fh).get("queries", {}))
-    missing_shards = [
-        s
-        for s in range(n_shards)
-        if not os.path.exists(_shard_path(s, n_shards, base))
-    ]
-    if missing_shards and not partial:
-        print(
-            f"missing shards {missing_shards}; rerun them or pass --partial "
-            "to overlay onto the committed artifact",
-            file=sys.stderr,
-        )
-        return 2
-    any_shard = False
-    for shard in range(n_shards):
-        path = _shard_path(shard, n_shards, base)
-        if not os.path.exists(path):
-            continue
-        any_shard = True
-        with open(path) as fh:
-            merged.update(json.load(fh))
-    if not any_shard:
-        print("no shard artifacts found", file=sys.stderr)
-        return 2
+    for path in shards:
+        merged.update(read_shard(path))
     cat = catalog()
     missing = sorted(set(cat) - set(merged))
     if missing:
         print(f"queries missing from shards: {missing}", file=sys.stderr)
         return 2
     # registry order, like the driver's artifact
-    ordered = {n: merged[n] for n in cat if n in merged}
+    ordered = {n: dict(sorted(merged[n].items())) for n in cat}
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     out = {
         "sf": float(sf),
@@ -206,32 +287,23 @@ def merge(
         "generated_unix": int(time.time()),
         "queries": ordered,
     }
-    with open(os.path.join(REPO, f"{base}.json"), "w") as fh:
-        json.dump(out, fh, indent=1)
-    fails = [n for n, r in ordered.items() if r["err"] not in (None, "no_oracle")]
+    fails = failures(ordered)
     n_oracle = sum(1 for r in ordered.values() if r["err"] != "no_oracle")
     print(
         f"{base}.json: {len(ordered)} queries, {n_oracle} oracle-paired,"
         f" {len(fails)} failures{': ' + str(fails) if fails else ''}"
     )
-    for shard in range(n_shards):
-        if os.path.exists(_shard_path(shard, n_shards, base)):
-            os.remove(_shard_path(shard, n_shards, base))
-    return 1 if fails else 0
+    return publish(base, out, fails, shards)
 
 
 def main() -> int:
-    mode = sys.argv[1]
+    mode = sys.argv[1] if len(sys.argv) > 1 else ""
     if mode == "run":
         shard, n = int(sys.argv[2]), int(sys.argv[3])
-        sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.01"
-        return run(shard, n, sf_dir)
+        return run(shard, n, sys.argv[4] if len(sys.argv) > 4 else DEFAULT_SF_DIR)
     if mode == "merge":
-        args = [a for a in sys.argv[2:] if a != "--partial"]
-        partial = "--partial" in sys.argv
-        n = int(args[0])
-        sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
-        return merge(n, sf_dir, partial=partial)
+        n = int(sys.argv[2])
+        return merge(n, sys.argv[3] if len(sys.argv) > 3 else DEFAULT_SF_DIR)
     print(__doc__, file=sys.stderr)
     return 2
 

@@ -36,15 +36,15 @@ Usage:
     python tools/invariance_sweep.py merge [sf_dir]          # compare + artifact
     python tools/invariance_sweep.py all [sf_dir]            # run all + merge
 
-Writes INVARIANCE_SWEEP.json at the repo root (same source_digest
-stamping as the correctness sweeps; tools/check_artifacts.py can
-verify it).
+Each layout pass appends to INVARIANCE_<layout>.shard.jsonl through
+correctness_sweep.run_records, so a killed pass resumes. Writes
+INVARIANCE_SWEEP.json at the repo root (same source_digest stamping
+as the correctness sweeps; tools/check_artifacts.py can verify it).
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import sys
 import time
@@ -54,6 +54,13 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_artifacts import source_digest  # noqa: E402
+from correctness_sweep import (  # noqa: E402
+    failures,
+    publish,
+    read_shard,
+    run_records,
+    shard_path,
+)
 
 LAYOUTS: dict[str, dict[str, str]] = {
     "p16_aqe": {
@@ -100,7 +107,7 @@ def _result_hash(pdf) -> str:
 
 
 def _shard_path(layout: str) -> str:
-    return os.path.join(REPO, f"INVARIANCE_{layout}.shard.json")
+    return shard_path(f"INVARIANCE_{layout}")
 
 
 def run(layout: str, sf_dir: str) -> int:
@@ -116,34 +123,23 @@ def run(layout: str, sf_dir: str) -> int:
     spark = get_spark(app_name=f"invariance_{layout}")
     for k, v in confs.items():
         spark.conf.set(k, v)
-    # stamp at RUN time (not merge time): the digest vouches for the
-    # tree the layout pass actually executed against, and the merge
-    # step refuses to combine passes from different tree states
-    digest = source_digest()
-    out: dict[str, dict] = {}
-    for i, name in enumerate(cat):
-        t0 = time.time()
-        rec: dict = {
-            "hash": None,
-            "n_rows": None,
-            "err": None,
-            "source_digest": digest,
-        }
+
+    def record(name: str) -> dict:
+        rec: dict = {"hash": None, "n_rows": None, "err": None}
         try:
             pdf = cat[name].fn(spark, sf_dir).toPandas()
             rec["n_rows"] = len(pdf)
             rec["hash"] = _result_hash(pdf)
         except Exception as exc:  # noqa: BLE001 — recorded, not raised
             rec["err"] = f"{type(exc).__name__}: {exc}"[:400]
-        out[name] = rec
-        print(
-            f"[{layout} {i + 1}/{len(cat)}] {name} {time.time() - t0:.1f}s "
-            f"{'ok' if rec['err'] is None else 'ERR ' + rec['err']}",
-            flush=True,
-        )
-    with open(_shard_path(layout), "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-    n_err = sum(1 for r in out.values() if r["err"])
+        return rec
+
+    # records are stamped at RUN time (not merge time): the digest
+    # vouches for the tree the layout pass actually executed against,
+    # and the merge step refuses to combine passes from different
+    # tree states
+    out = run_records(cat, record, _shard_path(layout))
+    n_err = len(failures(out))
     print(f"DONE layout {layout}: {len(out) - n_err}/{len(out)} ran", flush=True)
     return 1 if n_err else 0
 
@@ -158,8 +154,7 @@ def merge(sf_dir: str) -> int:
         if not os.path.exists(path):
             print(f"missing layout shard {path}", file=sys.stderr)
             return 2
-        with open(path) as fh:
-            shards[layout] = json.load(fh)
+        shards[layout] = read_shard(path)
     queries: dict[str, dict] = {}
     fails: list[str] = []
     for name in cat:
@@ -228,22 +223,16 @@ def merge(sf_dir: str) -> int:
         "generated_unix": int(time.time()),
         "queries": queries,
     }
-    with open(os.path.join(REPO, "INVARIANCE_SWEEP.json"), "w") as fh:
-        json.dump(artifact, fh, indent=1)
     print(
         f"INVARIANCE_SWEEP.json: {len(queries)} queries x {len(LAYOUTS)} "
         f"layouts, {len(fails)} failures"
         f"{': ' + str(fails) if fails else ''}"
     )
-    if fails:
-        # keep the per-layout shards: they hold the divergent hashes /
-        # errors needed to debug, and deleting them would force three
-        # full-registry re-runs just to look (r12 review)
-        print(f"shards kept for debugging: {[_shard_path(l) for l in LAYOUTS]}")
-        return 1
-    for layout in LAYOUTS:
-        os.remove(_shard_path(layout))
-    return 0
+    # failed shards hold the divergent hashes / errors needed to debug
+    # (r12 review), and a re-run repeats only their failed records
+    return publish(
+        "INVARIANCE_SWEEP", artifact, fails, [_shard_path(l) for l in LAYOUTS]
+    )
 
 
 def main() -> int:

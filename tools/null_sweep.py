@@ -20,9 +20,11 @@ vectors, join keys, timestamps) are left intact — a pipeline nulls
 measures and attributes, not identities.
 
 Usage:
-    python tools/null_sweep.py [src_sf_dir] [out_dir]
-        default: /root/testdata/sf0.1 -> /tmp/spark_graft_nulled_sf0.1
-Writes NULL_SWEEP.json at the repo root.
+    python tools/null_sweep.py [src_sf_dir]      # default /root/testdata/sf0.1
+The nulled variant is a ``data.derived`` dir keyed on the source
+tables and this tool's code. Records go through
+correctness_sweep.run_records (NULL_SWEEP.shard.jsonl, resumed when
+present). Writes NULL_SWEEP.json at the repo root.
 """
 
 from __future__ import annotations
@@ -30,13 +32,19 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_artifacts import source_digest  # noqa: E402
+from correctness_sweep import (  # noqa: E402
+    failures,
+    family_records,
+    publish,
+    shard_path,
+    variant,
+)
 
 # dedup_ added in round 12 (ADVICE r11: the NULL-lang block-sampler
 # divergence was latent precisely because the family was excluded
@@ -49,17 +57,16 @@ NULL_RULES = {
 }
 
 
+STATS = "_NULL_STATS.json"
+
+
 def generate(src_dir: str, out_dir: str) -> dict:
+    """Write the nulled copy of ``src_dir`` and its stats into the
+    empty dir ``out_dir``."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    marker = os.path.join(out_dir, "_NULLED_OK")
-    stats_path = os.path.join(out_dir, "_NULL_STATS.json")
-    if os.path.exists(marker) and os.path.exists(stats_path):
-        with open(stats_path) as fh:
-            return json.load(fh)
-    os.makedirs(out_dir, exist_ok=True)
     stats: dict = {}
     for name in os.listdir(src_dir):
         if not name.endswith(".parquet"):
@@ -79,40 +86,26 @@ def generate(src_dir: str, out_dir: str) -> dict:
                 "n_null": int(pc.sum(pc.cast(mask, "int64")).as_py()),
             }
         pq.write_table(t, os.path.join(out_dir, name))
-    with open(stats_path, "w") as fh:
+    with open(os.path.join(out_dir, STATS), "w") as fh:
         json.dump(stats, fh)
-    with open(marker, "w") as fh:
-        fh.write("ok")
     return stats
 
 
+def nulled(spark, src: str) -> tuple[str, dict]:
+    """``(dir, stats)`` of the nulled copy of ``src``."""
+    return variant(spark, src, "nulled", lambda d: generate(src, d), STATS)
+
+
 def main() -> int:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = (
-        sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_nulled_sf0.1"
-    )
-    stats = generate(src, out)
-    print(f"nulled variant at {out}: {json.dumps(stats)}", flush=True)
-
-    from big_data_final_project_spark.registry import catalog
     from big_data_final_project_spark.session import get_spark
-    from tools.correctness_sweep import _record
 
-    cat = catalog()
-    names = [n for n in cat if n.startswith(FAMILIES)]
+    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="null_sweep", shuffle_partitions=16)
-
-    records: dict[str, dict] = {}
-    for i, name in enumerate(names):
-        t0 = time.time()
-        records[name] = _record(spark, out, name, cat[name])
-        ok = records[name]["err"] in (None, "no_oracle")
-        print(
-            f"[{i + 1}/{len(names)}] {name} {time.time() - t0:.1f}s "
-            f"{'ok' if ok else 'FAIL ' + str(records[name]['err'])}",
-            flush=True,
-        )
-    fails = [n for n, r in records.items() if r["err"] not in (None, "no_oracle")]
+    out, stats = nulled(spark, src)
+    print(f"nulled variant at {out}: {json.dumps(stats)}", flush=True)
+    shard = shard_path("NULL_SWEEP")
+    records = family_records(spark, out, FAMILIES, shard)
+    fails = failures(records)
     artifact = {
         "src": src,
         "null_injection": stats,
@@ -123,13 +116,11 @@ def main() -> int:
         "source_digest": source_digest(),
         "queries": records,
     }
-    with open(os.path.join(REPO, "NULL_SWEEP.json"), "w") as fh:
-        json.dump(artifact, fh, indent=1)
     print(
         f"NULL_SWEEP.json: {len(records)} queries, {len(fails)} failures"
         f"{': ' + str(fails) if fails else ''}"
     )
-    return 1 if fails else 0
+    return publish("NULL_SWEEP", artifact, fails, [shard])
 
 
 if __name__ == "__main__":

@@ -24,9 +24,12 @@ supplier" shape that breaks naive hash joins. Every other table and
 column is byte-identical to the source, so FK domains stay intact.
 
 Usage:
-    python tools/skew_sweep.py [src_sf_dir] [out_dir]
-        default: /root/testdata/sf0.1 -> /tmp/spark_graft_skewed_sf0.1
-Writes SKEW_SWEEP.json at the repo root.
+    python tools/skew_sweep.py [src_sf_dir]      # default /root/testdata/sf0.1
+Both variants are ``data.derived`` dirs keyed on the source tables and
+this tool's code. The zipf and content legs' records go through
+correctness_sweep.run_records (SKEW_SWEEP.shard{zipf,content}.jsonl,
+resumed when present); the probes run each time. Writes
+SKEW_SWEEP.json at the repo root.
 """
 
 from __future__ import annotations
@@ -34,13 +37,19 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_artifacts import source_digest  # noqa: E402
+from correctness_sweep import (  # noqa: E402
+    failures,
+    family_records,
+    publish,
+    shard_path,
+    variant,
+)
 
 FAMILIES = ("join_", "graph_", "dedup_", "tpch_")
 SKEW_COLS = {"events": "user_id", "lineitem": "l_suppkey"}
@@ -64,18 +73,16 @@ BOILER_TOKENS = (
 BOILER_DOC_MOD = 10  # plant in doc_id % 10 == 0 (~10% of the corpus)
 
 
+STATS = "_SKEW_STATS.json"
+CONTENT_STATS = "_CONTENT_STATS.json"
+
+
 def generate(src_dir: str, out_dir: str) -> dict:
-    """Write the skewed variant; returns skew stats per table. A
-    _SKEWED_OK marker makes regeneration idempotent."""
+    """Write the skewed copy of ``src_dir`` and its skew stats per
+    table into the empty dir ``out_dir``."""
     import numpy as np
     import pyarrow.parquet as pq
 
-    marker = os.path.join(out_dir, "_SKEWED_OK")
-    stats_path = os.path.join(out_dir, "_SKEW_STATS.json")
-    if os.path.exists(marker) and os.path.exists(stats_path):
-        with open(stats_path) as fh:
-            return json.load(fh)
-    os.makedirs(out_dir, exist_ok=True)
     stats: dict = {}
     for name in os.listdir(src_dir):
         if not name.endswith(".parquet"):
@@ -103,26 +110,18 @@ def generate(src_dir: str, out_dir: str) -> dict:
                 "top_key_share_pct": round(100.0 * top / len(t), 1),
             }
         pq.write_table(t, os.path.join(out_dir, name))
-    with open(stats_path, "w") as fh:
+    with open(os.path.join(out_dir, STATS), "w") as fh:
         json.dump(stats, fh)
-    with open(marker, "w") as fh:
-        fh.write("ok")
     return stats
 
 
 def generate_content(src_dir: str, out_dir: str) -> dict:
-    """Write the content-skewed variant: BOILER_TOKENS prepended to
-    text (and n_chars updated) for doc_id % BOILER_DOC_MOD == 0;
-    every other table byte-identical."""
+    """Write the content-skewed copy of ``src_dir`` into the empty dir
+    ``out_dir``: BOILER_TOKENS prepended to text (and n_chars updated)
+    for doc_id % BOILER_DOC_MOD == 0; every other table byte-identical."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    marker = os.path.join(out_dir, "_CONTENT_OK")
-    stats_path = os.path.join(out_dir, "_CONTENT_STATS.json")
-    if os.path.exists(marker) and os.path.exists(stats_path):
-        with open(stats_path) as fh:
-            return json.load(fh)
-    os.makedirs(out_dir, exist_ok=True)
     stats: dict = {}
     for name in os.listdir(src_dir):
         if not name.endswith(".parquet"):
@@ -143,11 +142,25 @@ def generate_content(src_dir: str, out_dir: str) -> dict:
                 "hot_8gram_occurrences": int(mask.sum()) * (n_tok - 7),
             }
         pq.write_table(t, os.path.join(out_dir, name))
-    with open(stats_path, "w") as fh:
+    with open(os.path.join(out_dir, CONTENT_STATS), "w") as fh:
         json.dump(stats, fh)
-    with open(marker, "w") as fh:
-        fh.write("ok")
     return stats
+
+
+def skewed(spark, src: str) -> tuple[str, dict]:
+    """``(dir, stats)`` of the zipf-skewed copy of ``src``."""
+    return variant(spark, src, "skewed", lambda d: generate(src, d), STATS)
+
+
+def content_skewed(spark, src: str) -> tuple[str, dict]:
+    """``(dir, stats)`` of the content-skewed copy of ``src``."""
+    return variant(
+        spark,
+        src,
+        "content_skewed",
+        lambda d: generate_content(src, d),
+        CONTENT_STATS,
+    )
 
 
 def content_hot_path_probe(spark, out_dir: str) -> dict:
@@ -564,43 +577,21 @@ def aqe_probe(spark, out_dir: str) -> dict:
 
 
 def main() -> int:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else "/tmp/spark_graft_skewed_sf0.1"
-    )
-    stats = generate(src, out)
-    print(f"skewed variant at {out}: {json.dumps(stats)}", flush=True)
-
-    from big_data_final_project_spark.registry import catalog
     from big_data_final_project_spark.session import get_spark
 
-    sys.path.insert(0, REPO)
-    from tools.correctness_sweep import _record  # reuse the driver-format record
-
-    cat = catalog()
-    names = [n for n in cat if n.startswith(FAMILIES)]
+    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="skew_sweep", shuffle_partitions=16)
+    out, stats = skewed(spark, src)
+    print(f"skewed variant at {out}: {json.dumps(stats)}", flush=True)
 
     aqe = aqe_probe(spark, out)
     print(f"AQE probe: {aqe}", flush=True)
-
-    records: dict[str, dict] = {}
-    for i, name in enumerate(names):
-        t0 = time.time()
-        records[name] = _record(spark, out, name, cat[name])
-        ok = records[name]["err"] in (None, "no_oracle")
-        print(
-            f"[{i + 1}/{len(names)}] {name} {time.time() - t0:.1f}s "
-            f"{'ok' if ok else 'FAIL ' + str(records[name]['err'])}",
-            flush=True,
-        )
-    fails = [n for n, r in records.items() if r["err"] not in (None, "no_oracle")]
+    shards = [shard_path("SKEW_SWEEP", "zipf"), shard_path("SKEW_SWEEP", "content")]
+    records = family_records(spark, out, FAMILIES, shards[0])
+    fails = failures(records)
 
     # ---- content-key leg (VERDICT r8 #2) ----
-    content_out = out.rstrip("/") + "_content"
-    content_stats = generate_content(src, content_out)
+    content_out, content_stats = content_skewed(spark, src)
     print(f"content-skewed variant at {content_out}: {json.dumps(content_stats)}", flush=True)
     hot_probe = content_hot_path_probe(spark, content_out)
     print(f"content hot-path probe: {hot_probe}", flush=True)
@@ -608,23 +599,10 @@ def main() -> int:
     print(f"pair-volume probe: {pair_volume}", flush=True)
     zipf_volume = zipf_shingle_volume_probe(spark)
     print(f"zipf-shingle volume probe: {zipf_volume}", flush=True)
-    content_names = [n for n in cat if n.startswith(CONTENT_FAMILIES)]
-    content_records: dict[str, dict] = {}
-    for i, name in enumerate(content_names):
-        t0 = time.time()
-        content_records[name] = _record(spark, content_out, name, cat[name])
-        ok = content_records[name]["err"] in (None, "no_oracle")
-        print(
-            f"[content {i + 1}/{len(content_names)}] {name} "
-            f"{time.time() - t0:.1f}s "
-            f"{'ok' if ok else 'FAIL ' + str(content_records[name]['err'])}",
-            flush=True,
-        )
-    content_fails = [
-        n
-        for n, r in content_records.items()
-        if r["err"] not in (None, "no_oracle")
-    ]
+    content_records = family_records(
+        spark, content_out, CONTENT_FAMILIES, shards[1]
+    )
+    content_fails = failures(content_records)
     if not pair_volume["jaccard_reduced"]:
         content_fails.append("pair_volume:jaccard_not_reduced")
     if not pair_volume["containment_bounded"]:
@@ -665,8 +643,6 @@ def main() -> int:
         "source_digest": source_digest(),
         "queries": records,
     }
-    with open(os.path.join(REPO, "SKEW_SWEEP.json"), "w") as fh:
-        json.dump(artifact, fh, indent=1)
     print(
         f"SKEW_SWEEP.json: {len(records)} zipf + {len(content_records)} "
         f"content = {len(records) + len(content_records)} queries, "
@@ -684,7 +660,7 @@ def main() -> int:
         f"{pair_volume['containment_hits']}; containment recall "
         f"{pair_volume['containment_recall_pairs']}"
     )
-    return 1 if fails else 0
+    return publish("SKEW_SWEEP", artifact, fails, shards)
 
 
 if __name__ == "__main__":

@@ -27,9 +27,11 @@ Scripts injected, by doc_id % 4 on the append slice:
 - 3: Arabic (RTL) + a ZWJ family-emoji sequence
 
 Usage:
-    python tools/unicode_sweep.py [src_sf_dir] [out_dir]
-        default: /root/testdata/sf0.1 -> /tmp/spark_graft_unicode_sf0.1
-Writes UNICODE_SWEEP.json at the repo root.
+    python tools/unicode_sweep.py [src_sf_dir]   # default /root/testdata/sf0.1
+The injected variant is a ``data.derived`` dir keyed on the source
+tables and this tool's code. Records go through
+correctness_sweep.run_records (UNICODE_SWEEP.shard.jsonl, resumed when
+present). Writes UNICODE_SWEEP.json at the repo root.
 """
 
 from __future__ import annotations
@@ -37,13 +39,19 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_artifacts import source_digest  # noqa: E402
+from correctness_sweep import (  # noqa: E402
+    failures,
+    family_records,
+    publish,
+    shard_path,
+    variant,
+)
 
 FAMILIES = ("text_", "dedup_", "curation_", "pipeline_", "sample_")
 
@@ -62,22 +70,15 @@ REPLACEMENT = (
 )
 
 
+STATS = "_UNICODE_STATS.json"
+
+
 def generate(src_dir: str, out_dir: str) -> dict:
+    """Write the unicode-injected copy of ``src_dir`` and its stats
+    into the empty dir ``out_dir``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    marker = os.path.join(out_dir, "_UNICODE_OK")
-    stats_path = os.path.join(out_dir, "_UNICODE_STATS.json")
-    if os.path.exists(marker) and os.path.exists(stats_path):
-        with open(stats_path) as fh:
-            cached = json.load(fh)
-        # the cache is keyed on out_dir; only reuse it for the SAME
-        # source corpus (r12 review: a different src_dir with the
-        # default out_dir would silently run against stale data while
-        # the artifact records the new src)
-        if cached.get("_src_dir") == os.path.abspath(src_dir):
-            return cached
-    os.makedirs(out_dir, exist_ok=True)
     stats: dict = {"_src_dir": os.path.abspath(src_dir)}
     for name in os.listdir(src_dir):
         if not name.endswith(".parquet"):
@@ -111,42 +112,26 @@ def generate(src_dir: str, out_dir: str) -> dict:
             "n_appended": appended,
             "n_replaced": replaced,
         }
-    with open(stats_path, "w") as fh:
+    with open(os.path.join(out_dir, STATS), "w") as fh:
         json.dump(stats, fh)
-    with open(marker, "w") as fh:
-        fh.write("ok")
     return stats
 
 
+def unicode_variant(spark, src: str) -> tuple[str, dict]:
+    """``(dir, stats)`` of the unicode-injected copy of ``src``."""
+    return variant(spark, src, "unicode", lambda d: generate(src, d), STATS)
+
+
 def main() -> int:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = (
-        sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_unicode_sf0.1"
-    )
-    stats = generate(src, out)
-    print(f"unicode variant at {out}: {json.dumps(stats)}", flush=True)
-
-    from big_data_final_project_spark.registry import catalog
     from big_data_final_project_spark.session import get_spark
-    from tools.correctness_sweep import _record
 
-    cat = catalog()
-    names = [n for n in cat if n.startswith(FAMILIES)]
+    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="unicode_sweep", shuffle_partitions=16)
-
-    digest = source_digest()
-    records: dict[str, dict] = {}
-    for i, name in enumerate(names):
-        t0 = time.time()
-        records[name] = _record(spark, out, name, cat[name])
-        records[name]["source_digest"] = digest
-        ok = records[name]["err"] in (None, "no_oracle")
-        print(
-            f"[{i + 1}/{len(names)}] {name} {time.time() - t0:.1f}s "
-            f"{'ok' if ok else 'FAIL ' + str(records[name]['err'])}",
-            flush=True,
-        )
-    fails = [n for n, r in records.items() if r["err"] not in (None, "no_oracle")]
+    out, stats = unicode_variant(spark, src)
+    print(f"unicode variant at {out}: {json.dumps(stats)}", flush=True)
+    shard = shard_path("UNICODE_SWEEP")
+    records = family_records(spark, out, FAMILIES, shard)
+    fails = failures(records)
     artifact = {
         "src": src,
         "unicode_injection": stats,
@@ -157,13 +142,11 @@ def main() -> int:
         "source_digest": source_digest(),
         "queries": records,
     }
-    with open(os.path.join(REPO, "UNICODE_SWEEP.json"), "w") as fh:
-        json.dump(artifact, fh, indent=1)
     print(
         f"UNICODE_SWEEP.json: {len(records)} queries, {len(fails)} failures"
         f"{': ' + str(fails) if fails else ''}"
     )
-    return 1 if fails else 0
+    return publish("UNICODE_SWEEP", artifact, fails, [shard])
 
 
 if __name__ == "__main__":
