@@ -164,8 +164,7 @@ def publish(base: str, artifact: dict, fails: list[str], shards: list[str]) -> i
         print(f"shards kept for the re-run: {shards}")
         return 1
     for path in shards:
-        if os.path.exists(path):
-            os.remove(path)
+        os.remove(path)
     return 0
 
 
