@@ -21,9 +21,14 @@ sf0.1 writes CORRECTNESS_SF01.json; any other dir is rejected.
 
 It also holds the one record loop every sweep tool runs on
 (``run_records``): each finished record is appended to the shard as
-one JSON line and fsynced, and a re-run skips the names whose record
-already passed at the current source digest. A killed sweep therefore
-resumes where it died, and a failed one repeats only its failures.
+one JSON line, with the key it ran under (engine source digest, input
+dir, checker code), and fsynced. A re-run skips the names whose record
+passed under the same key, so a killed sweep resumes where it died and
+a failed one repeats only its failures; records run on another input
+or code run again. The null/NaN/unicode/skew sweeps run on a
+``variant`` of their source dir: a ``data.derived`` dir keyed on the
+source tables' content and the tool's code, so a rewritten table or an
+edited injection builds a new dir, and with it a new input key.
 
 Usage:
     python tools/correctness_sweep.py run <shard> <n_shards> [sf_dir]
@@ -38,6 +43,7 @@ Usage:
 from __future__ import annotations
 
 import hashlib
+import inspect
 import json
 import os
 import subprocess
@@ -68,19 +74,51 @@ def shard_path(base: str, part: str = "") -> str:
     return os.path.join(REPO, f"{base}.shard{part}.jsonl")
 
 
-def read_shard(path: str) -> dict[str, dict]:
-    """name -> record from a shard; the last line per name wins and a
-    torn line (the writer was killed mid-append) is ignored."""
+def run_key(input_dir: str, tool: str) -> dict:
+    """What a passed record vouches for: the engine's source digest,
+    the dir the record ran on, and the code that checked it (``tool``,
+    the file of the record function, and tests/oracle_utils.py)."""
+    code = hashlib.md5()
+    for path in (tool, os.path.join(REPO, "tests", "oracle_utils.py")):
+        with open(path, "rb") as fh:
+            code.update(fh.read())
+    return {
+        "source_digest": source_digest(),
+        "input": os.path.abspath(input_dir),
+        "checker": code.hexdigest(),
+    }
+
+
+def read_shard(path: str, key: dict) -> dict[str, dict]:
+    """name -> record of the shard lines written under ``key``; the
+    last such line per name wins and a torn line (the writer was killed
+    mid-append) is ignored."""
     records: dict[str, dict] = {}
     if os.path.exists(path):
         with open(path) as fh:
             for line in fh:
                 try:
-                    name, rec = json.loads(line)
+                    name, rec, line_key = json.loads(line)
                 except ValueError:
                     continue
-                records[name] = rec
+                if line_key == key:
+                    records[name] = rec
     return records
+
+
+def open_shard(path: str):
+    """``path`` opened for appending, a torn tail cut off first so the
+    next line starts on a line of its own."""
+    if os.path.exists(path):
+        with open(path, "rb+") as fh:
+            fh.truncate(fh.read().rfind(b"\n") + 1)
+    return open(path, "a")
+
+
+def append(fh, name: str, rec: dict, key: dict) -> None:
+    fh.write(json.dumps([name, rec, key]) + "\n")
+    fh.flush()
+    os.fsync(fh.fileno())
 
 
 def failures(records: dict[str, dict]) -> list[str]:
@@ -88,36 +126,30 @@ def failures(records: dict[str, dict]) -> list[str]:
 
 
 def run_records(
-    names: Iterable[str], record: Callable[[str], dict], shard: str
+    names: Iterable[str], record: Callable[[str], dict], shard: str, input_dir: str
 ) -> dict[str, dict]:
     """``record(name)`` for each name, in order, stamped with the
-    source digest and appended to ``shard`` as it finishes. Names whose
-    last record in ``shard`` passed at the current digest are skipped;
-    failed and stale ones run again."""
-    digest = source_digest()
+    source digest and appended to ``shard`` under ``run_key`` as it
+    finishes. Names whose last record under the same key passed are
+    skipped; failed ones, and those run on another input, code or
+    engine, run again."""
+    key = run_key(input_dir, inspect.getsourcefile(record))
+    digest = key["source_digest"]
     done = {
-        n: r
-        for n, r in read_shard(shard).items()
-        if r.get("source_digest") == digest and r.get("err") in PASSED
+        n: r for n, r in read_shard(shard, key).items() if r["err"] in PASSED
     }
-    if os.path.exists(shard):
-        # drop a torn tail, so the next line starts on a line of its own
-        with open(shard, "rb+") as fh:
-            fh.truncate(fh.read().rfind(b"\n") + 1)
     names = list(names)
     out: dict[str, dict] = {}
-    with open(shard, "a") as fh:
+    with open_shard(shard) as fh:
         for i, name in enumerate(names):
             step = f"[{i + 1}/{len(names)}] {name}"
             if name in done:
                 out[name] = done[name]
-                print(f"{step} skipped: passed at {digest[:12]}", flush=True)
+                print(f"{step} skipped: passed under the same key", flush=True)
                 continue
             t0 = time.time()
             rec = out[name] = {**record(name), "source_digest": digest}
-            fh.write(json.dumps([name, rec]) + "\n")
-            fh.flush()
-            os.fsync(fh.fileno())
+            append(fh, name, rec, key)
             ok = rec["err"] in PASSED
             print(
                 f"{step} {time.time() - t0:.1f}s "
@@ -139,6 +171,7 @@ def family_records(
         [n for n in cat if n.startswith(families)],
         lambda n: _record(spark, sf_dir, n, cat[n]),
         shard,
+        sf_dir,
     )
 
 
@@ -250,6 +283,7 @@ def run(shard: int, n_shards: int, sf_dir: str) -> int:
         names,
         lambda n: {**_record(spark, sf_dir, n, cat[n]), "commit": head},
         shard_path(base, f"{shard}of{n_shards}"),
+        sf_dir,
     )
     n_fail = len(failures(out))
     print(f"DONE shard {shard}: {len(out) - n_fail}/{len(out)} ok", flush=True)
@@ -267,9 +301,10 @@ def merge(n_shards: int, sf_dir: str) -> int:
     if missing_shards:
         print(f"missing shards {missing_shards}; run them", file=sys.stderr)
         return 2
+    key = run_key(sf_dir, __file__)
     merged: dict[str, dict] = {}
     for path in shards:
-        merged.update(read_shard(path))
+        merged.update(read_shard(path, key))
     cat = catalog()
     missing = sorted(set(cat) - set(merged))
     if missing:

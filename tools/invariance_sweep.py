@@ -36,8 +36,10 @@ Usage:
     python tools/invariance_sweep.py merge [sf_dir]          # compare + artifact
     python tools/invariance_sweep.py all [sf_dir]            # run all + merge
 
-Each layout pass appends to INVARIANCE_<layout>.shard.jsonl through
-correctness_sweep.run_records, so a killed pass resumes. Writes
+Each layout pass runs on correctness_sweep's record loop (shard
+INVARIANCE_<layout>.shard.jsonl), so a killed pass resumes; a merge
+that finds a divergence marks those queries failed in every layout
+shard, so the next `all` hashes them again. Writes
 INVARIANCE_SWEEP.json at the repo root (same source_digest stamping
 as the correctness sweeps; tools/check_artifacts.py can verify it).
 """
@@ -55,9 +57,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_artifacts import source_digest  # noqa: E402
 from correctness_sweep import (  # noqa: E402
+    append,
     failures,
+    open_shard,
     publish,
     read_shard,
+    run_key,
     run_records,
     shard_path,
 )
@@ -138,7 +143,7 @@ def run(layout: str, sf_dir: str) -> int:
     # vouches for the tree the layout pass actually executed against,
     # and the merge step refuses to combine passes from different
     # tree states
-    out = run_records(cat, record, _shard_path(layout))
+    out = run_records(cat, record, _shard_path(layout), sf_dir)
     n_err = len(failures(out))
     print(f"DONE layout {layout}: {len(out) - n_err}/{len(out)} ran", flush=True)
     return 1 if n_err else 0
@@ -148,38 +153,28 @@ def merge(sf_dir: str) -> int:
     from big_data_final_project_spark.registry import catalog
 
     cat = catalog()
+    # only records of the current tree, input and hash code are read,
+    # so every layout pass compared here ran against the same state
+    key = run_key(sf_dir, __file__)
     shards: dict[str, dict] = {}
     for layout in LAYOUTS:
         path = _shard_path(layout)
         if not os.path.exists(path):
             print(f"missing layout shard {path}", file=sys.stderr)
             return 2
-        shards[layout] = read_shard(path)
+        shards[layout] = read_shard(path, key)
     queries: dict[str, dict] = {}
     fails: list[str] = []
     for name in cat:
         base = shards[BASELINE].get(name, {})
-        # every layout pass must have run against the SAME tree —
-        # a cross-state merge would compare hashes of different code
-        run_digests = {
-            shards[layout].get(name, {}).get("source_digest")
-            for layout in LAYOUTS
-        }
         rec: dict = {
             "baseline_hash": base.get("hash"),
             "n_rows": base.get("n_rows"),
             "exempt": name in CONTRACT_EXEMPT,
             "layouts": {},
             "err": base.get("err"),
-            "source_digest": (
-                base.get("source_digest") if len(run_digests) == 1 else None
-            ),
+            "source_digest": base.get("source_digest"),
         }
-        if len(run_digests) != 1:
-            rec["err"] = (
-                f"layout passes ran at different source states: "
-                f"{sorted(str(d)[:12] for d in run_digests)}"
-            )
         # a query absent from the baseline shard must FAIL, not pass
         # by None == None hash comparison (r12 review: stale shards
         # plus a newly-registered query would otherwise print
@@ -228,8 +223,16 @@ def merge(sf_dir: str) -> int:
         f"layouts, {len(fails)} failures"
         f"{': ' + str(fails) if fails else ''}"
     )
-    # failed shards hold the divergent hashes / errors needed to debug
-    # (r12 review), and a re-run repeats only their failed records
+    # A divergence is found here, not in a layout pass, so its records
+    # passed there: append a failed copy of each to every layout shard,
+    # so a re-run hashes the diverging queries again. The shards are
+    # kept (r12 review), the divergent hashes in the earlier lines.
+    for layout in LAYOUTS:
+        with open_shard(_shard_path(layout)) as fh:
+            for name in fails:
+                r = shards[layout].get(name)
+                if r and r["err"] is None:
+                    append(fh, name, {**r, "err": "hash diverged across layouts"}, key)
     return publish(
         "INVARIANCE_SWEEP", artifact, fails, [_shard_path(l) for l in LAYOUTS]
     )

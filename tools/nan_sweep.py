@@ -25,10 +25,8 @@ non-finite readings:
 
 Usage:
     python tools/nan_sweep.py [src_sf_dir]       # default /root/testdata/sf0.1
-The injected variant is a ``data.derived`` dir keyed on the source
-tables and this tool's code. Records go through
-correctness_sweep.run_records (NAN_SWEEP.shard.jsonl, resumed when
-present). Writes NAN_SWEEP.json at the repo root.
+Runs on correctness_sweep's record loop and injected variants (shard
+NAN_SWEEP.shard.jsonl). Writes NAN_SWEEP.json at the repo root.
 """
 
 from __future__ import annotations
@@ -102,17 +100,12 @@ def generate(src_dir: str, out_dir: str) -> dict:
     return stats
 
 
-def nonfinite(spark, src: str) -> tuple[str, dict]:
-    """``(dir, stats)`` of the non-finite-injected copy of ``src``."""
-    return variant(spark, src, "nonfinite", lambda d: generate(src, d), STATS)
-
-
 def main() -> int:
     from big_data_final_project_spark.session import get_spark
 
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="nan_sweep", shuffle_partitions=16)
-    out, stats = nonfinite(spark, src)
+    out, stats = variant(spark, src, "nonfinite", lambda d: generate(src, d), STATS)
     print(f"non-finite variant at {out}: {json.dumps(stats)}", flush=True)
     shard = shard_path("NAN_SWEEP")
     records = family_records(spark, out, FAMILIES, shard)

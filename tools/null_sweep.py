@@ -21,10 +21,8 @@ measures and attributes, not identities.
 
 Usage:
     python tools/null_sweep.py [src_sf_dir]      # default /root/testdata/sf0.1
-The nulled variant is a ``data.derived`` dir keyed on the source
-tables and this tool's code. Records go through
-correctness_sweep.run_records (NULL_SWEEP.shard.jsonl, resumed when
-present). Writes NULL_SWEEP.json at the repo root.
+Runs on correctness_sweep's record loop and injected variants (shard
+NULL_SWEEP.shard.jsonl). Writes NULL_SWEEP.json at the repo root.
 """
 
 from __future__ import annotations

@@ -25,11 +25,9 @@ column is byte-identical to the source, so FK domains stay intact.
 
 Usage:
     python tools/skew_sweep.py [src_sf_dir]      # default /root/testdata/sf0.1
-Both variants are ``data.derived`` dirs keyed on the source tables and
-this tool's code. The zipf and content legs' records go through
-correctness_sweep.run_records (SKEW_SWEEP.shard{zipf,content}.jsonl,
-resumed when present); the probes run each time. Writes
-SKEW_SWEEP.json at the repo root.
+Both legs run on correctness_sweep's record loop and injected
+variants (shards SKEW_SWEEP.shard{zipf,content}.jsonl); the probes run
+each time. Writes SKEW_SWEEP.json at the repo root.
 """
 
 from __future__ import annotations
@@ -145,22 +143,6 @@ def generate_content(src_dir: str, out_dir: str) -> dict:
     with open(os.path.join(out_dir, CONTENT_STATS), "w") as fh:
         json.dump(stats, fh)
     return stats
-
-
-def skewed(spark, src: str) -> tuple[str, dict]:
-    """``(dir, stats)`` of the zipf-skewed copy of ``src``."""
-    return variant(spark, src, "skewed", lambda d: generate(src, d), STATS)
-
-
-def content_skewed(spark, src: str) -> tuple[str, dict]:
-    """``(dir, stats)`` of the content-skewed copy of ``src``."""
-    return variant(
-        spark,
-        src,
-        "content_skewed",
-        lambda d: generate_content(src, d),
-        CONTENT_STATS,
-    )
 
 
 def content_hot_path_probe(spark, out_dir: str) -> dict:
@@ -581,7 +563,7 @@ def main() -> int:
 
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="skew_sweep", shuffle_partitions=16)
-    out, stats = skewed(spark, src)
+    out, stats = variant(spark, src, "skewed", lambda d: generate(src, d), STATS)
     print(f"skewed variant at {out}: {json.dumps(stats)}", flush=True)
 
     aqe = aqe_probe(spark, out)
@@ -591,7 +573,9 @@ def main() -> int:
     fails = failures(records)
 
     # ---- content-key leg (VERDICT r8 #2) ----
-    content_out, content_stats = content_skewed(spark, src)
+    content_out, content_stats = variant(
+        spark, src, "content_skewed", lambda d: generate_content(src, d), CONTENT_STATS
+    )
     print(f"content-skewed variant at {content_out}: {json.dumps(content_stats)}", flush=True)
     hot_probe = content_hot_path_probe(spark, content_out)
     print(f"content hot-path probe: {hot_probe}", flush=True)

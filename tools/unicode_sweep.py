@@ -28,10 +28,8 @@ Scripts injected, by doc_id % 4 on the append slice:
 
 Usage:
     python tools/unicode_sweep.py [src_sf_dir]   # default /root/testdata/sf0.1
-The injected variant is a ``data.derived`` dir keyed on the source
-tables and this tool's code. Records go through
-correctness_sweep.run_records (UNICODE_SWEEP.shard.jsonl, resumed when
-present). Writes UNICODE_SWEEP.json at the repo root.
+Runs on correctness_sweep's record loop and injected variants (shard
+UNICODE_SWEEP.shard.jsonl). Writes UNICODE_SWEEP.json at the repo root.
 """
 
 from __future__ import annotations
