@@ -42,9 +42,10 @@ nothing is trusted by marker file or by pid.
   it.
 
 A build that raises leaves nothing behind. Building sweeps the other
-versions of the same name, except the private and in-flight
-(``.build<pid>``) dirs of live processes; the first load_table of a
-process also sweeps those of dead processes.
+versions of the same name, each with the derived root that queries
+built on it (an injected variant's mirrors), except the private and
+in-flight (``.build<pid>``) dirs of live processes; the first
+load_table of a process also sweeps those of dead processes.
 
 Known schemas: building a ``spark.read.parquet`` frame without a
 schema runs one Spark job to infer it from the footer — about 70 ms
@@ -217,9 +218,17 @@ def _fingerprint(build: Callable[[str], None]) -> str:
     return fp
 
 
+def _root(sf_dir: str) -> str:
+    """The dir that holds every derived dir of ``sf_dir``."""
+    return os.path.join(
+        tempfile.gettempdir(), f"spark_graft_derived_{sf_dir_tag(sf_dir)}"
+    )
+
+
 def _sweep(root: str, name: str, keep: str) -> None:
-    """Drop every version of ``name`` but ``keep``, except the private
-    or in-flight dirs of other live processes."""
+    """Drop every version of ``name`` but ``keep``, and the derived root
+    of each, except the private or in-flight dirs of other live
+    processes."""
     for d in glob.glob(os.path.join(glob.escape(root), f"{glob.escape(name)}_*")):
         m = _DERIVED.fullmatch(os.path.basename(d))
         if d == keep or not m or m[1] != name:
@@ -227,6 +236,7 @@ def _sweep(root: str, name: str, keep: str) -> None:
         pid = m[3] or m[4]
         if pid is None or int(pid) == os.getpid() or not _alive(int(pid)):
             shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(_root(d), ignore_errors=True)
 
 
 def derived(
@@ -247,9 +257,7 @@ def derived(
     digest = hashlib.md5(_fingerprint(build).encode())
     for table in sources:
         digest.update(source_key(sf_dir, table).encode())
-    root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_derived_{sf_dir_tag(sf_dir)}"
-    )
+    root = _root(sf_dir)
     path = os.path.join(root, f"{name}_{digest.hexdigest()[:12]}")
     if private:
         path = f"{path}_{os.getpid()}"

@@ -49,6 +49,28 @@ SHUFFLE_TARGET_BYTES = 4 << 20
 # code-generated, so it is set in the builder below and nowhere else.
 CODEGEN_CACHE_ENTRIES = 1000
 
+# Checkpoint file manager of every streaming query in the session: its
+# offset and commit logs, sink metadata and state store files. Spark's
+# default, FileContextBasedCheckpointFileManager, renames each log
+# entry into place through Hadoop's AbstractFileSystem.rename, which
+# reads the link status of its paths twice; without Hadoop's native
+# library (the pip pyspark ships none: NativeIO.isAvailable() is
+# false) each read forks a `readlink` process. A JFR recording
+# (jdk.ProcessStart events) of one perfbench `ingest` op on a 4-vCPU
+# VM counted 183 JVM process starts, 86 of them such readlinks, and
+# walCommit, commitOffsets and latestOffset took about 30 ms each per
+# query. This manager writes each entry to a temp file and publishes it
+# with one FileSystem.rename, a plain File.renameTo on the local
+# filesystem: 0 readlinks per op and about 7 ms per phase. Its one
+# precondition, which Spark's own fallback warning names, is an atomic
+# FileSystem.rename; local POSIX filesystems and HDFS give it. An
+# object store (S3, GCS) has no atomic rename and needs a manager of
+# its own.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 # JVM heap-size syntax accepted for SPARK_GRAFT_DRIVER_MEM: digits with
 # an optional k/m/g suffix ("2g", "512m", "2147483648").
 _JVM_SIZE = re.compile(r"[1-9][0-9]*[kKmMgG]?")
@@ -108,6 +130,13 @@ def get_spark(
     for the whole JVM when the first plan is code-generated, so only a
     session built here, before any other in the process, gets it.
 
+    Streaming checkpoints are written through CHECKPOINT_FILE_MANAGER
+    (a temp file and one FileSystem.rename per log entry): Spark's
+    default forks a ``readlink`` per checkpoint rename when Hadoop has
+    no native library, 86 forks per perfbench ``ingest`` op. It needs
+    an atomic FileSystem.rename (local POSIX filesystems, HDFS); an
+    object store needs its own manager.
+
     A ``SPARK_GRAFT_CPUS`` that is not a positive integer, or a
     ``SPARK_GRAFT_DRIVER_MEM`` that is not a JVM size (digits with an
     optional k/m/g suffix), raises a ValueError naming the variable.
@@ -147,6 +176,9 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
+        )
         .config("spark.driver.memory", driver_mem)
     )
     if not os.environ.get("SPARK_MASTER"):

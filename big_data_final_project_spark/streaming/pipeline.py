@@ -34,7 +34,9 @@ aside copy moves it back first.
 Every query the engine starts runs through :func:`_drain`
 (availableNow trigger, pinned shuffle partitions), and every event
 value goes through one codec, :func:`encode_event` /
-:func:`decode_event`.
+:func:`decode_event`. Checkpoint logs are written through the
+session's ``session.CHECKPOINT_FILE_MANAGER``: each entry a temp file
+published by one FileSystem.rename, which forks no ``readlink``.
 """
 
 from __future__ import annotations

@@ -111,6 +111,30 @@ def test_sweep_spares_live_in_flight_builds(spark, tmp_path):
         shutil.rmtree(_root(sf_dir), ignore_errors=True)
 
 
+def test_rebuilt_variant_takes_its_derived_root_with_it(spark, tables):
+    """Queries on a derived variant keep their own derived dirs (here
+    the events mirror) under the variant's root; rebuilding the variant
+    from new sources sweeps that root with the old variant."""
+
+    def build(path: str) -> None:
+        shutil.copy("/root/testdata/sf0.1/events.parquet", path)
+
+    old = derived(spark, tables, "variant", ("events",), build)
+    try:
+        files = load_table(spark, old, "events").inputFiles()
+        assert files and all(
+            f.removeprefix("file://").startswith(_root(old) + os.sep) for f in files
+        )
+        os.utime(os.path.join(tables, "events.parquet"), (1, 1))  # new source
+        new = derived(spark, tables, "variant", ("events",), build)
+        assert new != old and os.path.isdir(new)
+        assert not os.path.exists(old)
+        assert not os.path.exists(_root(old))
+    finally:
+        for d in glob.glob(os.path.join(_root(tables), "variant_*")) + [old]:
+            shutil.rmtree(_root(d), ignore_errors=True)
+
+
 def _plant_stale_store(path: str, sf_dir: str) -> None:
     """A valid date-partitioned store holding one bogus event."""
     row = pq.read_table(os.path.join(sf_dir, "events.parquet")).slice(0, 1)

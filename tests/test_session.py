@@ -1,5 +1,6 @@
-"""Session settings fail loudly and by name, and the session keeps the
-engine's generated code cached."""
+"""Session settings fail loudly and by name, the session keeps the
+engine's generated code cached, and streaming checkpoints are written
+through the FileSystem-based checkpoint manager."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 
 from big_data_final_project_spark.session import (
     _JVM_SIZE,
+    CHECKPOINT_FILE_MANAGER,
     CODEGEN_CACHE_ENTRIES,
     DEFAULT_DRIVER_MEM,
     get_spark,
@@ -61,3 +63,17 @@ def test_codegen_cache_holds_more_than_sparks_default(spark):
     before = _compiles(spark)
     _run(spark, 0)
     assert _compiles(spark) == before
+
+
+def test_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == CHECKPOINT_FILE_MANAGER
+    )
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == CHECKPOINT_FILE_MANAGER

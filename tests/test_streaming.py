@@ -43,6 +43,60 @@ def test_persist_exactly_once_across_replays(spark, sf_dir, staging, tmp_path_fa
     assert ids == n_src
 
 
+def _checkpoint_manager(spark, path: str) -> str:
+    """The class of the checkpoint manager a query started now would
+    write ``path`` with (it reads the same session Hadoop conf)."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getSimpleName()
+
+
+def test_checkpoint_of_sparks_default_manager_resumes(
+    spark, sf_dir, staging, tmp_path_factory
+):
+    """A checkpoint written under Spark's default checkpoint manager
+    resumes under the session's: the second run is batch 1, and every
+    valid row lands exactly once."""
+    import shutil
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    base = tmp_path_factory.mktemp("manager_switch")
+    src, store, ckpt = str(base / "src"), str(base / "store"), str(base / "ckpt")
+    os.makedirs(src)
+    parts = sorted(f for f in os.listdir(staging) if f.startswith("part-"))
+    for f in parts[1:]:
+        shutil.copy(os.path.join(staging, f), src)
+    session_manager = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        assert _checkpoint_manager(spark, ckpt) == "FileContextBasedCheckpointFileManager"
+        persist_stream(split_valid(read_event_stream(spark, src))[0], store, ckpt)
+    finally:
+        spark.conf.set(key, session_manager)
+    assert _checkpoint_manager(spark, ckpt) == "FileSystemBasedCheckpointFileManager"
+    shutil.copy(os.path.join(staging, parts[0]), src)
+    persist_stream(split_valid(read_event_stream(spark, src))[0], store, ckpt)
+
+    assert sorted(os.listdir(store)) == ["batch_id=0", "batch_id=1"]
+    assert sorted(f for f in os.listdir(os.path.join(ckpt, "commits"))) == [
+        ".0.crc",
+        ".1.crc",
+        "0",
+        "1",
+    ]
+    n_src = load_table(spark, sf_dir, "events").count()
+    assert read_store(spark, store).count() == n_src
+    assert read_store(spark, store).select("event_id").distinct().count() == n_src
+
+
 def test_quarantine_gets_exactly_the_poison(spark, staging):
     valid, quarantine = split_valid(read_event_stream(spark, staging))
     import big_data_final_project_spark.streaming.pipeline as P
