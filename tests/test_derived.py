@@ -20,6 +20,7 @@ import big_data_final_project_spark
 from big_data_final_project_spark import data
 from big_data_final_project_spark.data import (
     TABLES,
+    _root,
     derived,
     load_table,
     sf_dir_tag,
@@ -31,10 +32,6 @@ from .oracle_utils import run_differential
 
 def _jobs(spark) -> int:
     return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
-
-
-def _root(sf_dir: str) -> str:
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_derived_{sf_dir_tag(sf_dir)}")
 
 
 @pytest.fixture

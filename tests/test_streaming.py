@@ -86,7 +86,7 @@ def test_checkpoint_of_sparks_default_manager_resumes(
     persist_stream(split_valid(read_event_stream(spark, src))[0], store, ckpt)
 
     assert sorted(os.listdir(store)) == ["batch_id=0", "batch_id=1"]
-    assert sorted(f for f in os.listdir(os.path.join(ckpt, "commits"))) == [
+    assert sorted(os.listdir(os.path.join(ckpt, "commits"))) == [
         ".0.crc",
         ".1.crc",
         "0",
