@@ -71,6 +71,23 @@ CHECKPOINT_FILE_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 
+# Python call-site capture (spark.python.sql.dataFrameDebugging.enabled)
+# is off. PySpark wraps every Column/DataFrame method in
+# pyspark.errors.utils._with_origin; with capture on, each wrapped call
+# runs inspect.stack() and about 5 extra py4j round trips
+# (getActiveSession, conf.get, PySparkCurrentOrigin.set/clear) only to
+# attach a Python file:line to errors raised later at run time.
+# Building the 13 perfbench `dashboard` queries at sf0.01 on a 4-vCPU VM
+# (warm, 5 rounds) sent 401 py4j commands per query with capture on and
+# 161 with it off, and the median build went from 66 to 48 ms; nothing
+# the queries execute changes. The trade: a runtime error (say
+# DIVIDE_BY_ZERO under ANSI) keeps its error condition and SQLSTATE,
+# but its query context names a JVM frame instead of the Python line
+# that built the expression. Analysis errors raised while a query is
+# built are unchanged, Python traceback included. PySpark reads the
+# conf once per process (is_debugging_enabled caches it on first use),
+# so it is set in the builder below and nowhere else.
+
 # JVM heap-size syntax accepted for SPARK_GRAFT_DRIVER_MEM: digits with
 # an optional k/m/g suffix ("2g", "512m", "2147483648").
 _JVM_SIZE = re.compile(r"[1-9][0-9]*[kKmMgG]?")
@@ -137,6 +154,18 @@ def get_spark(
     an atomic FileSystem.rename (local POSIX filesystems, HDFS); an
     object store needs its own manager.
 
+    Python call-site capture (``spark.python.sql.dataFrameDebugging
+    .enabled``) is off: with it on, every Column/DataFrame call made
+    about 5 extra py4j round trips to record its ``file:line``, over a
+    quarter of the dashboard's query build time. A runtime Spark error
+    still carries its error condition and SQLSTATE, but no longer the
+    Python line that built the failing expression; analysis errors
+    raised while a query is built keep their full Python traceback.
+    Naming the failing query in a runtime error waits for job labels
+    set at the registry boundary. PySpark caches the conf for the
+    whole process when it first wraps a call, so a session built
+    elsewhere first leaves capture on for good.
+
     A ``SPARK_GRAFT_CPUS`` that is not a positive integer, or a
     ``SPARK_GRAFT_DRIVER_MEM`` that is not a JVM size (digits with an
     optional k/m/g suffix), raises a ValueError naming the variable.
@@ -179,6 +208,7 @@ def get_spark(
         .config(
             "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
         )
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", driver_mem)
     )
     if not os.environ.get("SPARK_MASTER"):

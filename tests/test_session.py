@@ -1,14 +1,19 @@
 """Session settings fail loudly and by name, the session keeps the
-engine's generated code cached, and streaming checkpoints are written
-through the FileSystem-based checkpoint manager."""
+engine's generated code cached, streaming checkpoints are written
+through the FileSystem-based checkpoint manager, and DataFrame calls
+capture no Python call site while errors stay diagnosable."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from pyspark.errors import AnalysisException, ArithmeticException
+from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
+from big_data_final_project_spark.data import load_table
+from big_data_final_project_spark.registry import catalog
 from big_data_final_project_spark.session import (
     _JVM_SIZE,
     CHECKPOINT_FILE_MANAGER,
@@ -77,3 +82,38 @@ def test_checkpoints_use_the_filesystem_manager(spark, tmp_path):
         spark._jsparkSession.sessionState().newHadoopConf(),
     )
     assert manager.getClass().getName() == CHECKPOINT_FILE_MANAGER
+
+
+def test_dataframe_calls_capture_no_call_site(spark, sf_dir, monkeypatch):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    catalog()["tpch_q1_pricing_summary"].fn(spark, sf_dir)
+    assert sent
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c]
+
+
+def test_runtime_error_keeps_its_condition(spark, sf_dir):
+    orders = load_table(spark, sf_dir, "orders")
+    with pytest.raises(ArithmeticException) as err:
+        orders.select(F.col("o_orderkey") / F.lit(0)).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    assert err.value.getSqlState() == "22012"
+
+
+def _build_with_a_typo(spark, sf_dir):
+    return load_table(spark, sf_dir, "orders").select("o_orderkee")
+
+
+def test_analysis_error_names_the_building_function(spark, sf_dir):
+    with pytest.raises(AnalysisException) as err:
+        _build_with_a_typo(spark, sf_dir)
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert "_build_with_a_typo" in [entry.name for entry in err.traceback]
